@@ -4,12 +4,18 @@ Plan (SURVEY §3.1 Spark rendering):
 
     scan(pages) -> select(url, html)            # column pruning, P3
       -> withColumn(part_id = pmod(xxhash64(url), n_buckets))
-      -> [resume] LEFT ANTI JOIN manifest ON part_id   # exactly-once, P13
+      -> bucket selection: [resume] LEFT ANTI JOIN manifest ON part_id
+         (exactly-once, P13) | stale buckets | incremental diff
       -> repartition(P, part_id)                # explicit shuffle, P8
       -> mapInArrow(extract_kernel)             # fused Arrow kernel, P1/P11
-      -> write parquet partitioned by part_id   # Iceberg-analog sink
+      -> dynamic-overwrite parquet write partitioned by part_id
     + per-task lineage rows via accumulator -> lineage parquet
-    + manifest rows (one per completed bucket) -> manifest parquet
+    + manifest rows (one per written bucket) -> manifest parquet
+
+The three job runners (``run_extraction_job``,
+``reprocess_stale_buckets``, ``run_incremental_job``) differ only in
+the bucket selection; everything from the repartition on is the one
+extract-and-commit core, ``_extract_and_commit``.
 
 At 100 TB this maps 1:1 onto an Iceberg table: ``part_id`` becomes the
 ``bucket(url)`` partition transform, the manifest+data write becomes a
@@ -26,11 +32,10 @@ this (SURVEY §5.6).
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.accumulators import AccumulatorParam
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .extract import KERNEL_VERSION, extract_document, extract_documents
@@ -239,7 +244,6 @@ def extract_pages(
     df: DataFrame,
     n_buckets: int = DEFAULT_BUCKETS,
     num_partitions: int | None = None,
-    lineage_acc=None,
 ) -> DataFrame:
     """Core transform: prune columns, bucket, run the fused Arrow
     kernel.  Returns the extraction DataFrame (lazy).
@@ -249,10 +253,13 @@ def extract_pages(
     here was pure overhead (guide §8: heavy opaque bytes must move at
     most once, and for a read-compute-discard query they need not move
     at all).  The exchange is kept ONLY when the input's partitioning
-    cannot feed every core (e.g. a single-split upstream scan); the
-    bucket-grouped layout the Iceberg-style sink wants is established
-    by ``run_extraction_job``'s own repartition before its partitioned
-    write, which is unchanged."""
+    cannot feed every core (e.g. a single-split upstream scan), and
+    ``num_partitions`` sets its partition count (default: the default
+    parallelism).  An input that already feeds every core keeps its
+    own partitioning and ``num_partitions`` has no effect: honouring
+    it there would bring back the html shuffle.  The bucket-grouped
+    layout the Iceberg-style sink wants is established by the job
+    runners' own repartition before their partitioned write."""
     pruned = df.select("url", "html")  # never ship text/lang into the kernel (P3)
     bucketed = with_part_id(pruned, n_buckets)
     sc = df.sparkSession.sparkContext
@@ -263,9 +270,7 @@ def extract_pages(
     if cur < sc.defaultParallelism:
         parts = num_partitions or sc.defaultParallelism
         bucketed = bucketed.repartition(parts, "part_id")
-    return bucketed.mapInArrow(
-        lambda it: _extract_batches(it, lineage_acc), schema=OUTPUT_DDL
-    )
+    return bucketed.mapInArrow(_extract_batches, schema=OUTPUT_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -280,24 +285,12 @@ def extract_pages(
 # below keep the historical pipeline API.
 
 
-def _manifest_path(output_path: str) -> str:
-    return FORMAT.manifest_path(output_path)
-
-
-def _lineage_path(output_path: str) -> str:
-    return FORMAT.lineage_path(output_path)
-
-
 def data_path(output_path: str) -> str:
     return FORMAT.data_path(output_path)
 
 
 def completed_buckets(spark: SparkSession, output_path: str) -> DataFrame | None:
     return FORMAT.committed_buckets(spark, output_path, KERNEL_VERSION)
-
-
-def _reconcile_orphans(spark: SparkSession, output_path: str) -> list[int]:
-    return FORMAT.reconcile(spark, output_path)
 
 
 LINEAGE_DDL = (
@@ -342,7 +335,64 @@ def _write_lineage(spark: SparkSession, lineage_rows: list[dict], output_path: s
             for r in lineage_rows
         ],
         schema=LINEAGE_DDL,
-    ).write.mode("append").parquet(_lineage_path(output_path))
+    ).write.mode("append").parquet(FORMAT.lineage_path(output_path))
+
+
+def _extract_and_commit(
+    spark: SparkSession,
+    bucketed: DataFrame,
+    output_path: str,
+    num_partitions: int | None,
+) -> tuple[list[int], dict]:
+    """The one extract-and-commit path behind the three job runners:
+    shuffle the selected (url, html, part_id) rows into buckets, run
+    the fused Arrow kernel, write with DYNAMIC partition overwrite (a
+    bucket is replaced only when the write carries rows for it, so a
+    crashed run repeats harmlessly), then append the deduped lineage
+    and commit exactly the buckets that lineage says were written.
+    Returns those buckets and the run stats; the ``observe`` counters
+    ride the write action itself (no second job)."""
+    sc = spark.sparkContext
+    lineage_acc = sc.accumulator([], _ListAccum())
+    parts = num_partitions or sc.defaultParallelism
+    obs = Observation("extract_metrics")
+    out = (
+        bucketed.repartition(parts, "part_id")
+        .mapInArrow(
+            lambda it: _extract_batches(it, lineage_acc), schema=OUTPUT_DDL
+        )
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.length("extracted_text")).alias("chars"),
+            F.count(F.col("error")).alias("errors"),
+        )
+    )
+    t0 = time.time()
+    (
+        out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("part_id")
+        .parquet(data_path(output_path))
+    )
+    wall = time.time() - t0
+    observed = obs.get
+
+    # lineage + manifest (post-write: in Iceberg these rows join the
+    # same atomic snapshot commit as the data files)
+    lineage_rows = _dedup_lineage(lineage_acc.value)
+    written = sorted({p for r in lineage_rows for p in r["part_ids"]})
+    _write_lineage(spark, lineage_rows, output_path)
+    FORMAT.commit_buckets(spark, output_path, written, KERNEL_VERSION)
+    n_docs = sum(r["n_docs"] for r in lineage_rows)
+    return written, {
+        "n_docs": n_docs,
+        "wall_s": wall,
+        "docs_per_sec": n_docs / wall if wall > 0 else 0.0,
+        "observed_rows": int(observed.get("rows", 0) or 0),
+        "observed_chars": int(observed.get("chars", 0) or 0),
+        "observed_errors": int(observed.get("errors", 0) or 0),
+    }
 
 
 def run_extraction_job(
@@ -360,58 +410,25 @@ def run_extraction_job(
     processes only unfinished buckets and never duplicates a row.
     Data directories for buckets missing from the manifest (crash
     between data and manifest commit) are deleted up front, so the
-    pair behaves atomically.  ``bucket_filter`` (a Column predicate on
+    pair behaves atomically — and no bucket this run writes has a
+    data directory yet.  ``bucket_filter`` (a Column predicate on
     part_id) exists for the kill/resume test to simulate a mid-job
     crash.
     """
-    sc = spark.sparkContext
-    orphans = _reconcile_orphans(spark, output_path)
-    lineage_acc = sc.accumulator([], _ListAccum())
-
+    orphans = FORMAT.reconcile(spark, output_path)
     bucketed = with_part_id(pages.select("url", "html"), n_buckets)
     done = completed_buckets(spark, output_path)
     if done is not None:
         bucketed = bucketed.join(F.broadcast(done), "part_id", "left_anti")
     if bucket_filter is not None:
         bucketed = bucketed.filter(bucket_filter)
-
-    parts = num_partitions or sc.defaultParallelism
-    out = bucketed.repartition(parts, "part_id").mapInArrow(
-        lambda it: _extract_batches(it, lineage_acc), schema=OUTPUT_DDL
+    written, stats = _extract_and_commit(
+        spark, bucketed, output_path, num_partitions
     )
-    # Observation: the idiomatic Spark metrics hook — aggregates ride
-    # the write action itself (no second job), complementing the
-    # row-level lineage table with run-level counters
-    from pyspark.sql import Observation  # noqa: PLC0415
-
-    obs = Observation("extract_metrics")
-    out = out.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.length("extracted_text")).alias("chars"),
-        F.count(F.col("error")).alias("errors"),
-    )
-    t0 = time.time()
-    out.write.mode("append").partitionBy("part_id").parquet(data_path(output_path))
-    wall = time.time() - t0
-    observed = obs.get
-
-    # lineage + manifest (post-write: in Iceberg these rows join the
-    # same atomic snapshot commit as the data files)
-    lineage_rows = _dedup_lineage(lineage_acc.value)
-    n_docs = sum(r["n_docs"] for r in lineage_rows)
-    processed = sorted({p for r in lineage_rows for p in r["part_ids"]})
-    _write_lineage(spark, lineage_rows, output_path)
-    FORMAT.commit_buckets(spark, output_path, processed, KERNEL_VERSION)
     return {
-        "n_docs": n_docs,
-        "n_buckets_processed": len(processed),
+        **stats,
+        "n_buckets_processed": len(written),
         "n_orphan_buckets_repaired": len(orphans),
-        "wall_s": wall,
-        "docs_per_sec": n_docs / wall if wall > 0 else 0.0,
-        "observed_rows": int(observed.get("rows", 0) or 0),
-        "observed_chars": int(observed.get("chars", 0) or 0),
-        "observed_errors": int(observed.get("errors", 0) or 0),
     }
 
 
@@ -428,7 +445,7 @@ def read_lineage(spark: SparkSession, output_path: str) -> DataFrame:
     attempt_number = 0 (first attempt, the only kind round 1 recorded)."""
     df = (
         spark.read.option("mergeSchema", "true")
-        .parquet(_lineage_path(output_path))
+        .parquet(FORMAT.lineage_path(output_path))
     )
     if "attempt_number" not in df.columns:
         df = df.withColumn("attempt_number", F.lit(0))
@@ -466,32 +483,20 @@ def reprocess_stale_buckets(
     """Re-extract only the buckets stamped with an older kernel
     version.  Data partitions are replaced via DYNAMIC partition
     overwrite (idempotent — a crashed re-run repeats harmlessly), then
-    the manifest gains current-version rows, after which
-    ``stale_buckets`` reports empty.  Old manifest rows stay as
-    history, exactly like superseded Iceberg snapshots."""
+    the manifest gains current-version rows for the buckets actually
+    rewritten.  A stale bucket with no rows in ``pages`` keeps its old
+    data and stays stale.  Old manifest rows stay as history, exactly
+    like superseded Iceberg snapshots."""
     stale = stale_buckets(spark, output_path)
     if not stale:
         return {"n_docs": 0, "n_buckets_reprocessed": 0}
-    sc = spark.sparkContext
-    lineage_acc = sc.accumulator([], _ListAccum())
     bucketed = with_part_id(pages.select("url", "html"), n_buckets).filter(
         F.col("part_id").isin(stale)
     )
-    parts = num_partitions or sc.defaultParallelism
-    out = bucketed.repartition(parts, "part_id").mapInArrow(
-        lambda it: _extract_batches(it, lineage_acc), schema=OUTPUT_DDL
+    written, stats = _extract_and_commit(
+        spark, bucketed, output_path, num_partitions
     )
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_id")
-        .parquet(data_path(output_path))
-    )
-    lineage_rows = _dedup_lineage(lineage_acc.value)
-    n_docs = sum(r["n_docs"] for r in lineage_rows)
-    _write_lineage(spark, lineage_rows, output_path)
-    FORMAT.commit_buckets(spark, output_path, stale, KERNEL_VERSION)
-    return {"n_docs": n_docs, "n_buckets_reprocessed": len(stale)}
+    return {"n_docs": stats["n_docs"], "n_buckets_reprocessed": len(written)}
 
 
 def snapshot_diff(old_pages: DataFrame, new_pages: DataFrame) -> DataFrame:
@@ -560,40 +565,22 @@ def run_incremental_job(
     }
     if not stale:
         return result
-    sc = spark.sparkContext
-    lineage_acc = sc.accumulator([], _ListAccum())
     bucketed = with_part_id(new_pages.select("url", "html"), n_buckets).filter(
         F.col("part_id").isin(stale)
     )
-    parts = num_partitions or sc.defaultParallelism
-    out = bucketed.repartition(parts, "part_id").mapInArrow(
-        lambda it: _extract_batches(it, lineage_acc), schema=OUTPUT_DDL
+    written, stats = _extract_and_commit(
+        spark, bucketed, output_path, num_partitions
     )
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_id")
-        .parquet(data_path(output_path))
-    )
+    result["n_docs"] = stats["n_docs"]
     # dynamic overwrite only replaces partitions PRESENT in the write:
     # a bucket emptied by removals must be deleted explicitly, AND
     # recorded as a manifest tombstone — deleting only the data would
     # leave completed_buckets permanently claiming a bucket that has no
     # data directory, indistinguishable from a committed one at the
-    # next _reconcile_orphans pass (r4 advisor finding)
-    live = {
-        r["part_id"]
-        for r in bucketed.select("part_id").distinct().collect()
-    }
-    emptied = [p for p in stale if p not in live]
+    # next reconcile pass (r4 advisor finding)
+    emptied = sorted(set(stale) - set(written))
     for p in emptied:
         FORMAT.delete_partition_dir(output_path, p)
-    lineage_rows = _dedup_lineage(lineage_acc.value)
-    result["n_docs"] = sum(r["n_docs"] for r in lineage_rows)
-    _write_lineage(spark, lineage_rows, output_path)
-    FORMAT.commit_buckets(
-        spark, output_path, [p for p in stale if p in live], KERNEL_VERSION
-    )
     FORMAT.tombstone_buckets(spark, output_path, emptied)
     return result
 

@@ -26,14 +26,18 @@ which gives the full pipeline a value-hash SQL oracle.
 
 from __future__ import annotations
 
+import gzip
 import os
+import zlib
 
 import numpy as np
 from pyspark.sql import SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from .http import build_http_response
 from .kernels import postprocess
-from .pipeline import extract_pages
+from .pdf import build_pdf, build_pdf_pages
+from .pipeline import OUTPUT_DDL, _extract_batches, extract_pages
 from .scan import read_parquet, spread
 
 PAGE = 1000.0
@@ -222,19 +226,21 @@ def det_grouped_postprocess(spark, sf_dir):
 
 # --- flagship: full extraction over pages built from documents -------------------
 
+_TEXT_COLS = ("url", "extracted_text", "n_regions", "n_blocks")
+
+
+def _documents(spark, sf_dir):
+    # spread: single-row-group fixture file (see scan.py)
+    path = f"{sf_dir}/documents.parquet"
+    return spread(read_parquet(spark, path), key=path)
+
+
 def _pages_from_documents(spark, sf_dir, docs=None):
     """(url, html) pages synthesized from the documents table.  Pass
     ``docs`` to build from an already-filtered frame (the filter then
     pushes down to the parquet scan instead of synthesizing the whole
     corpus and joining it away — see corpus_curation_pipeline, r6)."""
-    d = (
-        docs
-        if docs is not None
-        else spread(
-            read_parquet(spark, f"{sf_dir}/documents.parquet"),
-            key=f"{sf_dir}/documents.parquet",
-        )
-    )
+    d = docs if docs is not None else _documents(spark, sf_dir)
     html = F.concat(
         F.lit("<html><head><title>d</title></head><body>"
               "<nav><p><a href=\"/x\">home</a></p></nav><h1>Doc "),
@@ -253,7 +259,7 @@ def _pages_from_documents(spark, sf_dir, docs=None):
 def extract_pages_flagship(spark, sf_dir):
     pages = _pages_from_documents(spark, sf_dir)
     out = extract_pages(pages, n_buckets=64)
-    return out.select("url", "extracted_text", "n_regions", "n_blocks")
+    return out.select(*_TEXT_COLS)
 
 
 # provable closed form for this controlled page shape: nav+footer are
@@ -422,113 +428,85 @@ def refine_region_scores(spark, sf_dir):
     return refine_regions(out)
 
 
-def _pdf_pages_from_documents(spark, sf_dir, compress=False, style="Tj", objstm=False):
-    """Wrap documents rows into minimal single-page PDFs (title at
-    24pt, body at 12pt, footer in the boilerplate strip) — the PDF
-    twin of ``_pages_from_documents``.  ``compress``/``style`` select
-    FlateDecode streams and the show-operator family (Tj literal vs
-    kerned TJ arrays); all variants extract identical text.  When
-    ``compress`` is a list, each doc picks the ``doc_id % len`` entry
-    (used by the filter-chain twin to cycle codec specs)."""
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select("doc_id", "text")
-
-    def kernel(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        from doclayout_yolo_spark.pdf import build_pdf  # noqa: PLC0415
-
-        for pdf in batches:
-            urls, htmls = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                # PDF literal strings are byte strings: project text to
-                # latin-1 (unmappable -> '?') so a single exotic char
-                # can never kill the synthesis task; mirrored in the
-                # oracle's closed form
-                safe = str(text).encode("latin-1", "replace").decode("latin-1")
-                urls.append(f"https://testdata.local/pdf/{int(doc_id)}.pdf")
-                comp = (
-                    compress[int(doc_id) % len(compress)]
-                    if isinstance(compress, list)
-                    else compress
-                )
-                htmls.append(
-                    build_pdf(
-                        [
-                            (f"Doc {int(doc_id)}", 24.0, 60.0, 80.0),
-                            (safe, 12.0, 60.0, 150.0),
-                            ("copyright example", 9.0, 60.0, 760.0),
-                        ],
-                        compress=comp,
-                        style=style,
-                        objstm=objstm,
-                    )
-                )
-            yield pd.DataFrame({"url": urls, "html": htmls})
-
-    return d.mapInPandas(kernel, schema="url string, html binary")
-
-
-def _pdf_extracted(spark, sf_dir, compress=False, style="Tj", objstm=False):
-    """FUSED PDF synthesis + extraction: one mapInArrow kernel, one
+def _extract_built(df, build):
+    """FUSED payload build + extraction: one mapInArrow kernel, one
     JVM<->Python crossing (r6, guide §4.1: every Python boundary pays
-    a serialize/transpose each way — the old two-kernel chain shipped
-    every synthesized PDF JVM->Python->JVM->Python->JVM).  The synth
-    loop is byte-identical to ``_pdf_pages_from_documents`` and the
-    extraction delegates to the shared ``pipeline._extract_batches``
-    kernel, so extracted rows are identical to the unfused
-    ``extract_pages`` path (oracle-pinned).  ``part_id`` is a constant
-    0 here: the PDF contract queries never select it (bucketing
-    belongs to the sink path, which keeps the unfused operator)."""
-    from .pipeline import OUTPUT_DDL, _extract_batches  # noqa: PLC0415
-
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    a serialize/transpose each way — a build kernel chained to the
+    extraction kernel shipped every payload JVM->Python->JVM->Python->JVM).
+    ``build(*row) -> (url, payload)`` is a plain per-row payload
+    builder over the columns of ``df``, in order.  Extraction
+    delegates to the shared ``pipeline._extract_batches`` kernel, so
+    extracted rows are identical to the ``extract_pages`` path
+    (oracle-pinned).  ``part_id`` is a constant 0 here: the twins never
+    select it (bucketing belongs to the sink path)."""
 
     def kern(batches):
         import pyarrow as pa  # noqa: PLC0415
 
-        from doclayout_yolo_spark.pdf import build_pdf  # noqa: PLC0415
-
-        def synth():
+        def built():
             for rb in batches:
-                ids = rb.column(rb.schema.get_field_index("doc_id")).to_pylist()
-                texts = rb.column(rb.schema.get_field_index("text")).to_pylist()
-                urls, htmls = [], []
-                for doc_id, text in zip(ids, texts):
-                    # latin-1 projection mirrored in the oracle closed
-                    # form (same as _pdf_pages_from_documents)
-                    safe = str(text).encode("latin-1", "replace").decode("latin-1")
-                    urls.append(f"https://testdata.local/pdf/{int(doc_id)}.pdf")
-                    comp = (
-                        compress[int(doc_id) % len(compress)]
-                        if isinstance(compress, list)
-                        else compress
-                    )
-                    htmls.append(
-                        build_pdf(
-                            [
-                                (f"Doc {int(doc_id)}", 24.0, 60.0, 80.0),
-                                (safe, 12.0, 60.0, 150.0),
-                                ("copyright example", 9.0, 60.0, 760.0),
-                            ],
-                            compress=comp,
-                            style=style,
-                            objstm=objstm,
-                        )
-                    )
+                pages = [
+                    build(*row)
+                    for row in zip(*(c.to_pylist() for c in rb.columns))
+                ]
                 yield pa.RecordBatch.from_arrays(
                     [
-                        pa.array(urls, pa.string()),
-                        pa.array([0] * len(urls), pa.int32()),
-                        pa.array(htmls, pa.binary()),
+                        pa.array([u for u, _ in pages], pa.string()),
+                        pa.array([0] * len(pages), pa.int32()),
+                        pa.array([h for _, h in pages], pa.binary()),
                     ],
                     names=["url", "part_id", "html"],
                 )
 
-        yield from _extract_batches(synth())
+        yield from _extract_batches(built())
 
-    return d.mapInArrow(kern, OUTPUT_DDL).select(
-        "url", "extracted_text", "n_regions", "n_blocks"
+    return df.mapInArrow(kern, OUTPUT_DDL)
+
+
+def _latin1(text) -> str:
+    # PDF literal strings are byte strings: project text to latin-1
+    # (unmappable -> '?') so a single exotic char can never kill the
+    # synthesis task; mirrored in the oracles' closed forms
+    return str(text).encode("latin-1", "replace").decode("latin-1")
+
+
+def _pdf_page(doc_id: int, text, compress=False, style="Tj", objstm=False) -> bytes:
+    """One documents row as a minimal single-page PDF: title at 24pt,
+    body at 12pt, footer in the boilerplate strip — the PDF twin of
+    ``_pages_from_documents``."""
+    return build_pdf(
+        [
+            (f"Doc {doc_id}", 24.0, 60.0, 80.0),
+            (_latin1(text), 12.0, 60.0, 150.0),
+            ("copyright example", 9.0, 60.0, 760.0),
+        ],
+        compress=compress,
+        style=style,
+        objstm=objstm,
     )
+
+
+def _pdf_extracted(spark, sf_dir, compress=False, style="Tj", objstm=False):
+    """Single-page PDF twins of the flagship through one fused kernel.
+    ``compress``/``style`` select FlateDecode streams and the
+    show-operator family (Tj literal vs kerned TJ arrays); all variants
+    extract identical text.  When ``compress`` is a list, each doc
+    picks the ``doc_id % len`` entry (used by the filter-chain twin to
+    cycle codec specs)."""
+
+    def build(doc_id, text):
+        comp = (
+            compress[doc_id % len(compress)]
+            if isinstance(compress, list)
+            else compress
+        )
+        return (
+            f"https://testdata.local/pdf/{doc_id}.pdf",
+            _pdf_page(doc_id, text, comp, style, objstm),
+        )
+
+    docs = _documents(spark, sf_dir).select("doc_id", "text")
+    return _extract_built(docs, build).select(*_TEXT_COLS)
 
 
 def extract_pdf_pages(spark, sf_dir):
@@ -546,43 +524,27 @@ def extract_pdf_pages_multipage(spark, sf_dir):
     strip.  The parser lays pages out as a continuous scroll, so the
     extracted text equals title + half1 + half2 — the oracle closed
     form splits the text at the same midpoint token boundary."""
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
-    def kernel(batches):
-        import pandas as pd  # noqa: PLC0415
+    def build(doc_id, text):
+        words = _latin1(text).split(" ")
+        mid = len(words) // 2
+        half1, half2 = " ".join(words[:mid]), " ".join(words[mid:])
+        # a <=1-word doc has an empty first half: page 1 then carries
+        # only the title (mirrored in the oracle CASE)
+        page1 = [(f"Doc {doc_id}", 24.0, 60.0, 80.0)]
+        if half1:
+            page1.append((half1, 12.0, 60.0, 150.0))
+        page2 = [
+            (half2, 12.0, 60.0, 150.0),
+            ("copyright example", 9.0, 60.0, 760.0),
+        ]
+        return (
+            f"https://testdata.local/pdfmp/{doc_id}.pdf",
+            build_pdf_pages([page1, page2], compress=True),
+        )
 
-        from doclayout_yolo_spark.pdf import build_pdf_pages  # noqa: PLC0415
-
-        for pdf in batches:
-            urls, htmls = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                safe = str(text).encode("latin-1", "replace").decode("latin-1")
-                words = safe.split(" ")
-                mid = len(words) // 2
-                half1, half2 = " ".join(words[:mid]), " ".join(words[mid:])
-                urls.append(f"https://testdata.local/pdfmp/{int(doc_id)}.pdf")
-                # a <=1-word doc has an empty first half: page 1 then
-                # carries only the title (mirrored in the oracle CASE)
-                page1 = [(f"Doc {int(doc_id)}", 24.0, 60.0, 80.0)]
-                if half1:
-                    page1.append((half1, 12.0, 60.0, 150.0))
-                htmls.append(
-                    build_pdf_pages(
-                        [
-                            page1,
-                            [
-                                (half2, 12.0, 60.0, 150.0),
-                                ("copyright example", 9.0, 60.0, 760.0),
-                            ],
-                        ],
-                        compress=True,
-                    )
-                )
-            yield pd.DataFrame({"url": urls, "html": htmls})
-
-    pages = d.mapInPandas(kernel, schema="url string, html binary")
-    out = extract_pages(pages, n_buckets=64)
-    return out.select("url", "extracted_text", "n_regions", "n_blocks")
+    docs = _documents(spark, sf_dir).select("doc_id", "text")
+    return _extract_built(docs, build).select(*_TEXT_COLS)
 
 
 PDF_MULTIPAGE_SQL = r"""
@@ -663,25 +625,8 @@ def extract_pages_gzip(spark, sf_dir):
     the flagship — a pipeline without the inflate step extracts
     nothing from these pages."""
     pages = _pages_from_documents(spark, sf_dir)
-
-    def kern(batches):
-        import gzip  # noqa: PLC0415
-
-        import pandas as pd  # noqa: PLC0415
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "html": [
-                        gzip.compress(bytes(b), mtime=0) for b in pdf["html"]
-                    ],
-                }
-            )
-
-    gz = pages.mapInPandas(kern, schema="url string, html binary")
-    out = extract_pages(gz, n_buckets=64)
-    return out.select("url", "extracted_text", "n_regions", "n_blocks")
+    gz = _extract_built(pages, lambda url, html: (url, gzip.compress(html, mtime=0)))
+    return gz.select(*_TEXT_COLS)
 
 
 def extract_pages_http(spark, sf_dir):
@@ -697,46 +642,30 @@ def extract_pages_http(spark, sf_dir):
     closed-form oracle as the flagship — a pipeline without the
     envelope leg extracts nothing from these pages."""
     pages = _pages_from_documents(spark, sf_dir)
+    return _extract_built(pages, _http_envelope).select(*_TEXT_COLS)
 
-    def kern(batches):
-        import zlib  # noqa: PLC0415
 
-        import pandas as pd  # noqa: PLC0415
-
-        from .http import build_http_response  # noqa: PLC0415
-
-        for pdf in batches:
-            payloads = []
-            for u, b in zip(pdf["url"], pdf["html"]):
-                raw = bytes(b)
-                v = zlib.crc32(str(u).encode("utf-8")) % 5
-                if v == 0:
-                    out = build_http_response(raw)
-                elif v == 1:
-                    out = build_http_response(raw, chunked=True)
-                elif v == 2:
-                    out = build_http_response(raw, content_encoding="gzip")
-                elif v == 3:
-                    out = build_http_response(
-                        raw,
-                        content_encoding="gzip",
-                        chunked=True,
-                        chunk_size=13,
-                    )
-                else:
-                    # fixture pages are UTF-8; re-encode utf-16-le and
-                    # declare it ONLY in the header — transport label
-                    # must beat any in-band <meta> for this to extract
-                    out = build_http_response(
-                        raw.decode("utf-8").encode("utf-16-le"),
-                        charset="utf-16le",
-                    )
-                payloads.append(out)
-            yield pd.DataFrame({"url": pdf["url"], "html": payloads})
-
-    enveloped = pages.mapInPandas(kern, schema="url string, html binary")
-    out = extract_pages(enveloped, n_buckets=64)
-    return out.select("url", "extracted_text", "n_regions", "n_blocks")
+def _http_envelope(url: str, html: bytes) -> tuple[str, bytes]:
+    """One of five HTTP envelope variants, keyed by a crc32 of the url."""
+    v = zlib.crc32(url.encode("utf-8")) % 5
+    if v == 0:
+        out = build_http_response(html)
+    elif v == 1:
+        out = build_http_response(html, chunked=True)
+    elif v == 2:
+        out = build_http_response(html, content_encoding="gzip")
+    elif v == 3:
+        out = build_http_response(
+            html, content_encoding="gzip", chunked=True, chunk_size=13
+        )
+    else:
+        # fixture pages are UTF-8; re-encode utf-16-le and declare it
+        # ONLY in the header — transport label must beat any in-band
+        # <meta> for this to extract
+        out = build_http_response(
+            html.decode("utf-8").encode("utf-16-le"), charset="utf-16le"
+        )
+    return url, out
 
 
 def extract_outlinks_query(spark, sf_dir):
@@ -747,7 +676,7 @@ def extract_outlinks_query(spark, sf_dir):
     is stdlib urljoin against the page url; the controlled shapes give
     a closed-form oracle.  Output: one row per (page, position,
     resolved target)."""
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select("doc_id")
+    d = _documents(spark, sf_dir).select("doc_id")
     html = F.concat(
         F.lit('<html><body><p><a href="https://ext.example.com/p/'),
         F.col("doc_id").cast("string"),
@@ -953,7 +882,7 @@ def sitemap_extract(spark, sf_dir):
     closed-form oracle.  Output: one row per sitemap entry."""
     from .crawl import sitemap_entries_df  # noqa: PLC0415
 
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select("doc_id")
+    d = _documents(spark, sf_dir).select("doc_id")
 
     def kern(batches):
         import gzip as _gzip  # noqa: PLC0415
@@ -1033,7 +962,7 @@ def extract_metadata_query(spark, sf_dir):
     closed-form oracle.  Output: one metadata row per page."""
     from .pipeline import extract_metadata_df  # noqa: PLC0415
 
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select("doc_id")
+    d = _documents(spark, sf_dir).select("doc_id")
     i = F.col("doc_id").cast("string")
     html = F.concat(
         F.lit('<html lang="en-US"><head><title>Doc &amp;\n  '),
@@ -1103,7 +1032,7 @@ def host_pagerank(spark, sf_dir):
     per host, rank rounded to 6 dp."""
     from .pipeline import extract_outlinks_df, pagerank_df  # noqa: PLC0415
 
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select("doc_id")
+    d = _documents(spark, sf_dir).select("doc_id")
     t1 = ((F.col("doc_id") * 3 + 1) % _PR_HOSTS).cast("string")
     t2 = ((F.col("doc_id") + 7) % _PR_HOSTS).cast("string")
     html = F.concat(
@@ -1215,45 +1144,26 @@ def extract_quarantine_stats(spark, sf_dir):
     docs a one-in-a-billion poison would otherwise kill whole
     partitions).  Output: per url, extraction status + reason bucket —
     closed-form oracle on the planting rule."""
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select("doc_id", "text")
-
     CORRUPT = (
         b"%PDF-1.4\n1 0 obj\n<< /Length 8 /Filter /FlateDecode >>\n"
         b"stream\nBADBYTES\nendstream\nendobj\n"
     )
 
-    def kernel(batches):
-        import pandas as pd  # noqa: PLC0415
+    def build(doc_id, text):
+        url = f"https://testdata.local/q/{doc_id}"
+        if doc_id % 7 == 0:
+            return url, CORRUPT
+        body = _pdf_page(doc_id, text, compress=True)
+        if doc_id % 7 == 1:
+            # RC4-stub: declare /Encrypt in the trailer dict — the
+            # reader must quarantine-with-reason, not parse
+            body = body.replace(
+                b"trailer\n<< ", b"trailer\n<< /Encrypt 99 0 R ", 1
+            )
+        return url, body
 
-        from doclayout_yolo_spark.pdf import build_pdf  # noqa: PLC0415
-
-        for pdf in batches:
-            urls, htmls = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                urls.append(f"https://testdata.local/q/{int(doc_id)}")
-                if int(doc_id) % 7 == 0:
-                    htmls.append(CORRUPT)
-                    continue
-                safe = str(text).encode("latin-1", "replace").decode("latin-1")
-                body = build_pdf(
-                    [
-                        (f"Doc {int(doc_id)}", 24.0, 60.0, 80.0),
-                        (safe, 12.0, 60.0, 150.0),
-                        ("copyright example", 9.0, 60.0, 760.0),
-                    ],
-                    compress=True,
-                )
-                if int(doc_id) % 7 == 1:
-                    # RC4-stub: declare /Encrypt in the trailer dict —
-                    # the reader must quarantine-with-reason, not parse
-                    body = body.replace(
-                        b"trailer\n<< ", b"trailer\n<< /Encrypt 99 0 R ", 1
-                    )
-                htmls.append(body)
-            yield pd.DataFrame({"url": urls, "html": htmls})
-
-    pages = d.mapInPandas(kernel, schema="url string, html binary")
-    out = extract_pages(pages, n_buckets=64)
+    docs = _documents(spark, sf_dir).select("doc_id", "text")
+    out = _extract_built(docs, build)
     return out.select(
         "url",
         F.when(F.length("extracted_text") > 0, 1).otherwise(0)
@@ -1288,14 +1198,14 @@ N_COPY = 10  # planted duplicate pages (re-crawls under a tracking url)
 
 def corpus_curation_pipeline(spark, sf_dir):
     """The 100 TB workload end-to-end in ONE query: pages -> layout
-    extraction (mapInPandas kernel) -> exact content dedup on the
+    extraction (mapInArrow kernel) -> exact content dedup on the
     EXTRACTED text (md5 fingerprint, min-url wins — re-crawls under
     tracking urls collapse because boilerplate was stripped first) ->
     quality gate.  Duplicates are planted deterministically: the first
     N_COPY documents appear again under '?ref=copy' urls.  The closed
     form of the controlled page shape makes the whole chain
     SQL-oracle-able."""
-    docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet")
+    docs = _documents(spark, sf_dir)
     pages = _pages_from_documents(spark, sf_dir)
     # r6: build the planted copies DIRECTLY from the filtered docs —
     # the old form synthesized the whole corpus a second time and
@@ -1465,7 +1375,7 @@ def extract_pages_charsets(spark, sf_dir):
     proving the BOM + meta-prescan sniffer (extract.decode_html)
     recovers the exact unicode text.  Closed-form oracle: the
     controlled page shape extracts to 'Doc <id>\\n\\n<marker>'."""
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     prefixes, suffixes = _charset_page_parts()
     v = (F.col("doc_id") % _N_CS).cast("int")
 
@@ -1486,7 +1396,7 @@ def extract_pages_charsets(spark, sf_dir):
         ).alias("html"),
     )
     out = extract_pages(pages, n_buckets=64)
-    return out.select("url", "extracted_text", "n_regions", "n_blocks")
+    return out.select(*_TEXT_COLS)
 
 
 _CS_MARKER_CASE = " ".join(

@@ -289,6 +289,39 @@ def test_kernel_version_reprocessing(spark, tmp_path_factory):
     assert r2["n_docs"] == 0
 
 
+def test_reprocess_keeps_unwritten_bucket_stale(spark, tmp_path_factory):
+    # a stale bucket with no rows in the pages handed to reprocess keeps
+    # its old-kernel data, so it must stay stale: stamping it with the
+    # current version would hide a silent mix of old and new rows
+    from doclayout_yolo_spark.pipeline import (
+        reprocess_stale_buckets,
+        stale_buckets,
+        with_part_id,
+    )
+
+    out = str(tmp_path_factory.mktemp("reproc_skip") / "o")
+    pages = generate_pages_df(spark, 60, partitions=4)
+    run_extraction_job(spark, pages, out, n_buckets=8)
+    mdir = f"{out}/_manifest"
+    man = spark.read.parquet(mdir).collect()
+    import shutil
+
+    shutil.rmtree(mdir)
+    spark.createDataFrame(
+        [(r["part_id"], "v0") for r in man],
+        schema="part_id int, kernel_version string",
+    ).write.parquet(mdir)
+    stale = stale_buckets(spark, out)
+    victim = stale[0]
+
+    kept = with_part_id(pages, 8).filter(F.col("part_id") != victim)
+    res = reprocess_stale_buckets(spark, kept.drop("part_id"), out, n_buckets=8)
+    assert res["n_buckets_reprocessed"] == len(stale) - 1
+    assert stale_buckets(spark, out) == [victim]
+    # the victim's old rows are still there, next to the rewritten ones
+    assert read_extracted(spark, out).count() == 60
+
+
 def test_observed_metrics_match_lineage(spark, tmp_path_factory):
     # the Observation counters ride the write action and must agree
     # with the lineage-accumulator totals — including on a fully

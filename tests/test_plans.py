@@ -7,10 +7,13 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
+
+import pytest
 
 from doclayout_yolo_spark.fixtures import PAGES_DDL, generate_pages_pandas
 from doclayout_yolo_spark.pipeline import extract_pages
-from doclayout_yolo_spark.queries_detect import extract_pages_flagship
+from doclayout_yolo_spark.queries_detect import DETECT_QUERIES, extract_pages_flagship
 from doclayout_yolo_spark.queries_relational import q1_pricing_summary, q5_region_revenue
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -38,10 +41,12 @@ def test_extraction_query_path_shuffles_only_when_narrow(spark):
     # the explicit bucket shuffle so the kernel stage is parallel.
     pdf = generate_pages_pandas(10)
     df = spark.createDataFrame(pdf, schema=PAGES_DDL)
-    import re
 
-    wide = df.repartition(spark.sparkContext.defaultParallelism)
-    plan = plan_of(extract_pages(wide, n_buckets=16))
+    cores = spark.sparkContext.defaultParallelism
+    wide = df.repartition(cores)
+    # an explicit num_partitions does not re-shuffle an input that
+    # already feeds every core (bench.py passes cores*4 on such input)
+    plan = plan_of(extract_pages(wide, n_buckets=16, num_partitions=cores * 2))
     # the input repartition is the ONLY exchange; none added on top
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
     assert "MapInArrow" in plan  # r6: Arrow-native kernel boundary
@@ -51,6 +56,40 @@ def test_extraction_query_path_shuffles_only_when_narrow(spark):
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
     assert "REPARTITION_BY_NUM" in plan
     assert "MapInArrow" in plan
+
+
+# every queries_detect query that runs the extraction kernel
+EXTRACTION_QUERIES = [
+    "extract_pages",
+    "extract_region_rows",
+    "refine_region_scores",
+    "corpus_curation_pipeline",
+    "extract_pages_charsets",
+    "extract_pages_gzip",
+    "extract_pages_http",
+    "extract_quarantine_stats",
+    "extract_pdf_pages",
+    "extract_pdf_pages_compressed",
+    "extract_pdf_pages_multipage",
+    "extract_pdf_pages_objstm",
+    "extract_pdf_pages_hex",
+    "extract_pdf_pages_cid",
+    "extract_pdf_pages_filters",
+    "extract_pdf_pages_diffenc",
+]
+
+
+@pytest.mark.parametrize("name", EXTRACTION_QUERIES)
+def test_extraction_query_crosses_into_python_once(spark, name):
+    # payload synthesis and extraction share ONE mapInArrow kernel: a
+    # separate synthesis kernel ships every payload across the Python
+    # boundary twice more (JVM->Python->JVM->Python->JVM)
+    plan = plan_of(DETECT_QUERIES[name][0](spark, SF_DIR))
+    assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 1
+    # the one exception is refine_region_scores' refinement MLP, which
+    # runs on the extracted regions rather than building payloads
+    n_pandas = 1 if name == "refine_region_scores" else 0
+    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == n_pandas
 
 
 def test_q1_predicate_pushdown(spark):
@@ -207,8 +246,6 @@ def test_bucketed_tables_join_without_shuffle(spark):
     # bucketed tables: two fact tables bucketed+sorted on the join key
     # join with ZERO Exchange nodes — the co-located join that turns
     # the biggest shuffle at 100 TB into a local merge
-    import re
-
     import shutil
 
     spark.sql("DROP TABLE IF EXISTS b_orders")
@@ -275,8 +312,6 @@ def test_sequence_packing_two_phase_prefix_sum(spark):
     from doclayout_yolo_spark.queries_curation import sequence_packing
 
     plan = plan_of(sequence_packing(spark, SF_DIR))
-    import re
-
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
     assert len(specs) == 2
     # a partition column appears bare (no ASC/DESC); an order-only spec
@@ -403,8 +438,6 @@ def test_pagerank_recurrence_references_checkpointed_statics(spark):
     # the documents scan run once at build (eager localCheckpoint) and
     # the final plan references only checkpointed RDD scans — bounded
     # exchange count, no extraction kernel, no parquet re-scan
-    import re
-
     from doclayout_yolo_spark.queries_detect import host_pagerank
 
     plan = plan_of(host_pagerank(spark, SF_DIR))
