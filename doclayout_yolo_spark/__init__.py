@@ -7,9 +7,8 @@ Architecture (see SURVEY.md):
 - ``kernels``     — pure NumPy detection post-processing (two-stage
                     top-k, IoU NMS, class filter, reading-order sort,
                     box geometry).  No Spark imports; deterministic.
-- ``functions``   — scalar feature functions (23-dim text/spatial
-                    features, boilerplate heuristics) both as pure
-                    Python and as Spark Column expressions.
+- ``textfeat``    — the 23-dim per-region text/spatial feature
+                    vector (pure Python/NumPy, used inside the kernel).
 - ``extract``     — the per-document HTML -> blocks -> proposals ->
                     regions -> (extracted_text, spans) core shared by
                     the single-process oracle and the Spark kernel.
@@ -17,14 +16,19 @@ Architecture (see SURVEY.md):
                     anchor for the golden tests).
 - ``fixtures``    — seeded synthetic Common-Crawl-style ``pages`` table
                     generator (url, warc_ts, html, text, lang).
-- ``pipeline``    — the Spark job: scan -> salted repartition ->
-                    mapInPandas(extract kernel) -> partitioned output
+- ``pipeline``    — the Spark job: scan -> bucketed repartition ->
+                    mapInArrow(extract kernel) -> partitioned output
                     with per-partition lineage rows and a checkpoint
                     manifest for exactly-once resume.
 - ``metrics``     — Spark-side detection-metrics harness (IoU match,
                     TP/FP cumsum windows, AP aggregation).
-- ``session``     — SparkSession builder with the tuned configs
-                    (AQE, shuffle partitions, Arrow batch sizing).
+- ``session``     — SparkSession factory applying the one table of
+                    tuned configs (AQE, shuffle partitions, Arrow
+                    batch sizing) to every session, jobs included.
+- ``memo``        — the one session-scoped memo cache, keyed by
+                    (application, group, path, mtime).
+- ``scan``        — memoized parquet readers with a scan-parallelism
+                    floor (``read_parquet`` / ``read_spread``).
 """
 
 __version__ = "0.1.0"

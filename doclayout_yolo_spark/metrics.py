@@ -256,17 +256,6 @@ def confusion_matrix(
 
 AP_DDL = "cls long, iou_idx int, iou_thr double, ap double"
 
-# (applicationId, persisted-ap) of recent ap_per_class calls, oldest
-# first.  Bounded LRU rather than evict-every-call: Spark's
-# CacheManager matches cached plans STRUCTURALLY, so a repeated
-# identical metrics query (bench reps, sweeps) silently reuses the
-# previous call's materialized ap and skips the whole match_table
-# applyInPandas pipeline — evicting on every call forfeited that and
-# cost a measured 4x on detection_map.  The bound answers the r3
-# ADVICE accumulation concern (each entry is nc x 10 rows).
-_AP_PERSISTED: list = []
-_AP_KEEP = 8
-
 
 def ap_per_class(
     matches: DataFrame, gt_counts: "dict[int, int] | DataFrame"
@@ -279,116 +268,55 @@ def ap_per_class(
     nc x 10 rows executor-side.  Classes that have ground-truth labels
     but ZERO detections still contribute ap=0 rows (the reference
     zero-initializes ap over unique target classes, utils/metrics.py
-    ap_per_class), otherwise mAP is inflated.
+    ap_per_class), otherwise mAP is inflated: one detection-less stub
+    row per gt class is unioned into the kernel input, so such a class
+    reaches the kernel as a zero-detection group and the kernel emits
+    its zeros — the output is read once, never persisted.
 
     ``gt_counts`` may be a plain dict (historical API) or a LAZY
     ``(cls, n)`` DataFrame (r6): the dict form forces the caller to
     run a count-and-collect Spark job at query-BUILD time — a job the
     bench protocol pays on every timed run — while the DataFrame form
-    broadcast-joins the counts in and keeps the whole query one lazy
-    plan.  Both forms produce identical rows (detection_map's golden
-    oracle pins this).
+    keeps the whole query one lazy plan.  The dict becomes a local
+    frame, so both forms run the same plan and produce identical rows
+    (detection_map's golden oracle pins this).
     """
     t = len(IOU_THRESHOLDS)
-    lazy = isinstance(gt_counts, DataFrame)
-    if lazy:
-        counts = gt_counts.select(
-            F.col("cls").cast("long").alias("cls"),
-            F.col("n").cast("long").alias("n_gt"),
-        ).filter(F.col("n_gt") > 0)
-        # inner join: det-only classes (no gt) drop out — exactly the
-        # dict path's n_gt == 0 early return
-        matches = matches.join(F.broadcast(counts), "cls", "inner")
-        gt_b: dict[int, int] = {}
-    else:
-        gt_b = {int(k): int(v) for k, v in gt_counts.items() if int(v) > 0}
+    if not isinstance(gt_counts, DataFrame):
+        gt_counts = matches.sparkSession.createDataFrame(
+            [(int(k), int(v)) for k, v in gt_counts.items()], "cls long, n long"
+        )
+    counts = gt_counts.select(
+        F.col("cls").cast("long").alias("cls"),
+        F.col("n").cast("long").alias("n_gt"),
+    ).filter(F.col("n_gt") > 0)
+    # inner join: detections of a class with no ground truth are all
+    # FP with AP undefined -> excluded (reference only loops gt
+    # classes); the stubs (doc null) carry every gt class into the
+    # kernel even when it has no detection
+    groups = matches.join(F.broadcast(counts), "cls", "inner").unionByName(
+        counts, allowMissingColumns=True
+    )
 
     def _ap_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
         cls = int(key[0])
-        n_gt = int(pdf["n_gt"].iloc[0]) if lazy else gt_b.get(cls, 0)
-        cols = {"cls": [], "iou_idx": [], "iou_thr": [], "ap": []}
-        if n_gt == 0:
-            # detections for a class with no ground truth: all FP, AP
-            # undefined -> excluded (reference only loops gt classes)
-            return pd.DataFrame(cols)
-        pdf = pdf.sort_values(
+        n_gt = int(pdf["n_gt"].iloc[0])
+        pdf = pdf[pdf["doc"].notna()].sort_values(
             ["conf", "doc", "det_id"], ascending=[False, True, True]
         )
         npreds = np.arange(1, len(pdf) + 1, dtype=np.float64)
+        cols = {"cls": [], "iou_idx": [], "iou_thr": [], "ap": []}
         for i in range(t):
             ctp = pdf[f"tp{i}"].to_numpy(dtype=np.float64).cumsum()
             cols["cls"].append(cls)
             cols["iou_idx"].append(i)
             cols["iou_thr"].append(float(IOU_THRESHOLDS[i]))
-            cols["ap"].append(ap_interp(ctp / n_gt, ctp / npreds))
+            cols["ap"].append(
+                ap_interp(ctp / n_gt, ctp / npreds) if len(pdf) else 0.0
+            )
         return pd.DataFrame(cols)
 
-    from pyspark import StorageLevel  # noqa: PLC0415
-
-    # persisted: both the result branch and the zero-fill anti-join
-    # below consume it — without the cache the whole match_table
-    # applyInPandas pipeline would execute a second time just to list
-    # the classes present.  The cache entry is nc x iou_thresholds
-    # rows, negligible at any scale.  Long-lived sessions invoking
-    # metrics repeatedly must not accumulate persisted handles, so each
-    # call releases the previous call's (already-consumed) entry.
-    ap = (
-        matches.groupBy("cls")
-        .applyInPandas(_ap_group, schema=AP_DDL)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    app = matches.sparkSession.sparkContext.applicationId
-    # drop dead-app handles outright; unpersist the oldest live ones
-    # beyond the LRU bound.  CRITICAL: both persist() and unpersist()
-    # key the cache by STRUCTURAL plan match, so (a) a handle whose
-    # plan sameResult-matches a retained one must never be appended
-    # twice — evicting the old twin later would uncache the live entry
-    # out from under the new handle — and (b) identical repeated calls
-    # therefore keep ONE handle and the list never fills from them.
-    live = [(a, p) for a, p in _AP_PERSISTED if a == app]
-
-    def _same(a, b):
-        try:
-            return (
-                a._jdf.queryExecution().analyzed()
-                .sameResult(b._jdf.queryExecution().analyzed())
-            )
-        except Exception:
-            return False
-
-    if any(_same(p, ap) for _a, p in live):
-        _AP_PERSISTED[:] = live  # cache hit: existing handle covers it
-    else:
-        while len(live) >= _AP_KEEP:
-            _old_app, old_ap = live.pop(0)
-            try:
-                old_ap.unpersist(blocking=False)
-            except Exception:
-                pass
-        _AP_PERSISTED[:] = live + [(app, ap)]
-    # gt classes with zero detections never reach the kernel: union ap=0
-    # rows for them (anti-join against the tiny cached ap output keeps
-    # this distributed and avoids re-deriving classes from matches)
-    spark = matches.sparkSession
-    thr = spark.createDataFrame(
-        [(i, float(IOU_THRESHOLDS[i])) for i in range(t)],
-        schema="iou_idx int, iou_thr double",
-    )
-    if lazy:
-        zeros = counts.crossJoin(thr).select(
-            "cls", "iou_idx", "iou_thr", F.lit(0.0).alias("ap")
-        )
-    else:
-        zeros = spark.createDataFrame(
-            [
-                (int(c), i, float(IOU_THRESHOLDS[i]), 0.0)
-                for c in sorted(gt_b)
-                for i in range(t)
-            ],
-            schema=AP_DDL,
-        )
-    missing = zeros.join(ap.select("cls").distinct(), "cls", "left_anti")
-    return ap.unionByName(missing)
+    return groups.groupBy("cls").applyInPandas(_ap_group, schema=AP_DDL)
 
 
 def summarize(ap_df: pd.DataFrame) -> dict:

@@ -22,7 +22,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from .scan import read_parquet, spread
+from .scan import read_parquet, read_spread
 
 # engine-agnostic 60-bit md5 hash (see duckdb-spark parity rules)
 _H_SPARK = "cast(conv(substring(md5({x}), 1, 15), 16, 10) as bigint)"
@@ -31,7 +31,7 @@ _H_DUCK = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
 
 def _docs(spark: SparkSession, sf_dir: str):
     # spread: single-row-group fixture file — keep the map stage wide
-    return spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet")
+    return read_spread(spark, f"{sf_dir}/documents.parquet")
 
 
 # --- paragraph-level (chunk-hash) dedup --------------------------------------

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .scan import read_parquet, spread
+from .scan import read_parquet, read_spread
 
 from .textfeat import KEYWORD_TABLE
 
@@ -613,7 +613,7 @@ FROM w LEFT JOIN hits ON w.window_id = hits.window_id
 
 
 def url_host_stats(spark, sf_dir):
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet")
+    d = read_spread(spark, f"{sf_dir}/documents.parquet")
     url = F.expr(_URL_EXPR.format(str_t="STRING"))
     host = F.lower(F.regexp_extract(url, r"https?://([^/:?]+)", 1))
     path = F.regexp_extract(url, r"https?://[^/?]+(/[^?]*)", 1)

@@ -11,16 +11,18 @@ identical everywhere; 15 hex chars fit in int64.  Spark:
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .scan import read_parquet, spread
+from .memo import cached
+from .scan import read_parquet, read_spread
 
 
 def _docs(spark: SparkSession, sf_dir: str):
     # spread: the single-row-group fixture file would otherwise put the
     # whole tokenize/hash/regex map stage on one core (scan.py)
-    return spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet")
+    return read_spread(spark, f"{sf_dir}/documents.parquet")
 
 
 def _h64(col):
@@ -308,9 +310,6 @@ JACCARD_THRESHOLD = 0.6
 MAX_SHINGLE_DF = 50
 
 
-_SHINGLE_CACHE: dict = {}
-
-
 def _shingles(spark, sf_dir):
     """Distinct (doc_id, 3-gram) rows, PERSISTED: every dedup query
     reuses this subtree several times (df cap, per-doc counts, both
@@ -322,29 +321,17 @@ def _shingles(spark, sf_dir):
     at cluster scale this is the 'stage the shingle table once'
     pattern, spilling instead of recomputing.
 
-    Memoized per (application, sf_dir, source mtime) so repeated
-    query-builder invocations across a long-lived session (contract
-    sweeps, bench loops) reuse ONE persisted DataFrame instead of
-    stacking cache entries — and a rewritten fixture under the same
-    path invalidates the memo instead of serving stale data (r3
-    ADVICE; policy lives in memo.memo_lookup)."""
-    from .memo import memo_lookup, source_mtime  # noqa: PLC0415
-
-    key, cached = memo_lookup(
-        _SHINGLE_CACHE,
-        spark.sparkContext.applicationId,
-        sf_dir,
-        source_mtime(f"{sf_dir}/documents.parquet"),
+    Memoized through ``memo.cached`` so repeated query-builder
+    invocations across a long-lived session (contract sweeps, bench
+    loops) reuse ONE persisted DataFrame instead of stacking cache
+    entries — and a rewritten fixture under the same path invalidates
+    the memo instead of serving stale data."""
+    return cached(
+        spark, "shingles", f"{sf_dir}/documents.parquet",
+        lambda: _shingles_from(_docs(spark, sf_dir)).persist(
+            StorageLevel.MEMORY_AND_DISK
+        ),
     )
-    if cached is not None:
-        return cached
-    from pyspark import StorageLevel  # noqa: PLC0415
-
-    built = _shingles_from(_docs(spark, sf_dir)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _SHINGLE_CACHE[key] = built
-    return built
 
 
 def _shingles_from(docs_df):
@@ -387,9 +374,6 @@ def _capped_from(sh):
     return sh.join(F.broadcast(hot), "sh", "left_anti")
 
 
-_CAPPED_CACHE: dict = {}
-
-
 def _capped_shingles(spark, sf_dir):
     """df-capped shingles, PERSISTED + memoized exactly like
     ``_shingles`` (r6): the cap anti-join re-executed once per
@@ -398,23 +382,12 @@ def _capped_shingles(spark, sf_dir):
     materialization saves N-1 passes over the corpus shingle table.
     Same 100-TB story as the parent cache: stage the filtered shingle
     table once, spill instead of recompute."""
-    from pyspark import StorageLevel  # noqa: PLC0415
-
-    from .memo import memo_lookup, source_mtime  # noqa: PLC0415
-
-    key, cached = memo_lookup(
-        _CAPPED_CACHE,
-        spark.sparkContext.applicationId,
-        sf_dir,
-        source_mtime(f"{sf_dir}/documents.parquet"),
+    return cached(
+        spark, "capped_shingles", f"{sf_dir}/documents.parquet",
+        lambda: _capped_from(_shingles(spark, sf_dir)).persist(
+            StorageLevel.MEMORY_AND_DISK
+        ),
     )
-    if cached is not None:
-        return cached
-    built = _capped_from(_shingles(spark, sf_dir)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _CAPPED_CACHE[key] = built
-    return built
 
 
 def dedup_ngram_jaccard(spark, sf_dir):
@@ -1853,9 +1826,6 @@ SELECT event_type, event_id, value, sample_rank FROM (
 MAX_CC_ITERS = 20
 
 
-_CLUSTER_CACHE: dict = {}
-
-
 def dedup_clusters(spark, sf_dir):
     """Group near-duplicate documents into clusters: connected
     components over the Jaccard>=threshold pair graph via iterative
@@ -1865,25 +1835,15 @@ def dedup_clusters(spark, sf_dir):
     from the LSH-candidate-restricted exact Jaccard (the scale path:
     the all-pairs equi-join never runs), mirrored in the oracle.
     Output: (doc_id, cluster_id = min doc_id of the component)."""
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    from .memo import memo_lookup, source_mtime  # noqa: PLC0415
-
-    # memoized per (app, sf_dir, mtime): the iterative propagation runs
-    # driver-side ACTIONS at build time, so every builder call would
-    # otherwise re-run the whole loop AND leak one cached labels DF
-    key, cached = memo_lookup(
-        _CLUSTER_CACHE,
-        spark.sparkContext.applicationId,
-        sf_dir,
-        source_mtime(f"{sf_dir}/documents.parquet"),
+    # memoized: the iterative propagation runs driver-side ACTIONS at
+    # build time, so every builder call would otherwise re-run the
+    # whole loop AND leak one cached labels DF
+    labels = cached(
+        spark, "cluster_labels", f"{sf_dir}/documents.parquet",
+        lambda: _cluster_labels_from(
+            dedup_jaccard_lsh(spark, sf_dir).select("doc_a", "doc_b")
+        ),
     )
-    if cached is not None:
-        return cached.select("doc_id", "cluster_id")
-    labels = _cluster_labels_from(
-        dedup_jaccard_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    )
-    _CLUSTER_CACHE[key] = labels
     return labels.select("doc_id", "cluster_id")
 
 
@@ -1977,8 +1937,6 @@ def neardup_collapse_df(docs_df, with_stats: bool = False):
     collapsed docs, band rows dropped by BUCKET_CAP (docs a fired cap
     silently RETAINS — they join no candidate pair), and the largest
     bucket seen."""
-    from pyspark import StorageLevel  # noqa: PLC0415
-
     sh = _shingles_from(docs_df.select("doc_id", "text")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -2365,44 +2323,32 @@ FROM scored
 
 SUBSTR_W = 8
 
-_GRAM_CACHE: dict = {}
-
 
 def _substr_grams(spark, sf_dir):
     """(doc_id, p, g) W-gram rows, PERSISTED + memoized like _shingles:
     the gram explode (xW amplification over the corpus) is the dominant
     cost and has TWO consumers (the dup-gram count and the coverage
     join) — without the cache it would execute twice per query."""
-    from pyspark import StorageLevel  # noqa: PLC0415
 
-    from .memo import memo_lookup, source_mtime  # noqa: PLC0415
+    def build():
+        d = _docs(spark, sf_dir)
+        toks = d.select("doc_id", F.expr(_toks_spark("text")).alias("w"))
+        # docs shorter than W tokens emit NO grams: Spark's sequence(0, -1)
+        # is DESCENDING (never empty), so the short-doc case needs an
+        # explicit branch — caught by the randomized-corpus gate
+        return toks.select(
+            "doc_id",
+            F.posexplode(
+                F.expr(
+                    f"CASE WHEN size(w) >= {SUBSTR_W} THEN"
+                    f" transform(sequence(0, size(w) - {SUBSTR_W}),"
+                    f" i -> md5(concat_ws(' ', slice(w, i + 1, {SUBSTR_W}))))"
+                    f" ELSE cast(array() as array<string>) END"
+                )
+            ).alias("p", "g"),
+        ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    key, cached = memo_lookup(
-        _GRAM_CACHE,
-        spark.sparkContext.applicationId,
-        sf_dir,
-        source_mtime(f"{sf_dir}/documents.parquet"),
-    )
-    if cached is not None:
-        return cached
-    d = _docs(spark, sf_dir)
-    toks = d.select("doc_id", F.expr(_toks_spark("text")).alias("w"))
-    # docs shorter than W tokens emit NO grams: Spark's sequence(0, -1)
-    # is DESCENDING (never empty), so the short-doc case needs an
-    # explicit branch — caught by the randomized-corpus gate
-    built = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"CASE WHEN size(w) >= {SUBSTR_W} THEN"
-                f" transform(sequence(0, size(w) - {SUBSTR_W}),"
-                f" i -> md5(concat_ws(' ', slice(w, i + 1, {SUBSTR_W}))))"
-                f" ELSE cast(array() as array<string>) END"
-            )
-        ).alias("p", "g"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _GRAM_CACHE[key] = built
-    return built
+    return cached(spark, "substr_grams", f"{sf_dir}/documents.parquet", build)
 
 
 def exact_substring_dup_fraction(spark, sf_dir):

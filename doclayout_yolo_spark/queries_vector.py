@@ -14,7 +14,8 @@ import numpy as np
 from pyspark.sql import SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .scan import read_parquet, spread
+from .memo import cached
+from .scan import read_parquet, read_spread
 
 TOPK = 3
 N_QUERIES = 5  # vec_id < 5 are the query vectors
@@ -28,9 +29,8 @@ def _emb(spark: SparkSession, sf_dir: str, wide: bool = True):
     light and the extra exchange measured a net LOSS at both scales
     (ann_lsh_multiband 0.92 vs 1.51 s at sf0.1, 3.14 vs 3.41 at
     sf1.0)."""
-    df = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    if wide:
-        df = spread(df, key=f"{sf_dir}/embeddings.parquet")
+    path = f"{sf_dir}/embeddings.parquet"
+    df = read_spread(spark, path) if wide else read_parquet(spark, path)
     return df.select(
         "vec_id",
         "label",
@@ -168,7 +168,7 @@ def multimodal_feature_extract(spark, sf_dir):
     shape of any decode->featurize stage (image color histograms,
     audio energy bands), computed in one Arrow-batched pass.  Output:
     doc_id, 16 bin counts, and the dominant nibble."""
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select(
+    d = read_spread(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("payload")
     )
 
@@ -221,7 +221,7 @@ FROM f
 
 
 def multimodal_decode_stub(spark, sf_dir):
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select(
+    d = read_spread(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("payload")
     )
     return d.mapInPandas(_decode_kernel, schema=DECODE_DDL)
@@ -258,7 +258,7 @@ def _ascii_payload(spark, sf_dir):
     ANY input text — without it, one multi-byte character silently
     desyncs chunk boundaries between the engines (DuckDB v1.0 has no
     BLOB substring/md5 to express the byte view directly)."""
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet")
+    d = read_spread(spark, f"{sf_dir}/documents.parquet")
     return d.select(
         "doc_id",
         F.encode(
@@ -685,9 +685,6 @@ FROM truth LEFT JOIN cand ON truth.vec_a = cand.vec_a AND truth.vec_b = cand.vec
 K_CELLS = 16
 
 
-_HEAD_VEC_CACHE: dict = {}
-
-
 def _head_vectors(spark, sf_dir, k: int) -> np.ndarray:
     """First-k vectors as a (k, DIM) float64 matrix — the collected
     codebook the IVF/PQ kernels close over.  Memoized per
@@ -695,17 +692,8 @@ def _head_vectors(spark, sf_dir, k: int) -> np.ndarray:
     artifact (a trained codebook ships to executors the same way), but
     building a query should not re-scan embeddings on every builder
     invocation (plan audits, bench warmups, repeated contract runs)."""
-    from .memo import memo_lookup, source_mtime  # noqa: PLC0415
 
-    # mtime in the key: a rewritten fixture under the same path must
-    # not serve a stale codebook (r3 ADVICE; policy in memo.memo_lookup)
-    key, got = memo_lookup(
-        _HEAD_VEC_CACHE,
-        spark.sparkContext.applicationId,
-        (sf_dir, k),
-        source_mtime(f"{sf_dir}/embeddings.parquet"),
-    )
-    if got is None:
+    def build():
         rows = sorted(
             _emb(spark, sf_dir)
             .select("vec_id", "vec")
@@ -713,9 +701,9 @@ def _head_vectors(spark, sf_dir, k: int) -> np.ndarray:
             .collect(),
             key=lambda r: r["vec_id"],
         )
-        got = np.array([r["vec"] for r in rows], dtype=np.float64)
-        _HEAD_VEC_CACHE[key] = got
-    return got
+        return np.array([r["vec"] for r in rows], dtype=np.float64)
+
+    return cached(spark, ("head_vectors", k), f"{sf_dir}/embeddings.parquet", build)
 
 
 def _ivf_assigned(spark, sf_dir):

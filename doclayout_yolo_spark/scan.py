@@ -1,4 +1,16 @@
-"""Scan-parallelism floor for compute-heavy first stages.
+"""Session-memoized parquet scans with a scan-parallelism floor for
+compute-heavy first stages.
+
+``read_parquet`` memoizes ``spark.read.parquet(path)`` through the one
+cache (``memo.cached``): the call costs ~100 ms of DRIVER time (footer
+read + schema inference), and the bench protocol rebuilds every query
+once per timed run.  Only the READER frame is memoized — no rows are
+materialized or cached, every execution re-scans the parquet data; it
+is the moral equivalent of registering temp views once per session.
+
+``read_spread`` memoizes ``spread`` of that reader the same way, so
+the partition-count probe below (~40 ms of plan -> RDD conversion)
+also runs once per (application, path, mtime) instead of per build.
 
 The bench's parquet inputs are single-file, single-ROW-GROUP tables
 (documents.parquet at sf1.0 is 5.9 MB / 1 row group), so a plain read
@@ -28,72 +40,27 @@ byte-identical with and without the repartition.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
-#: (applicationId, key, source mtime) -> bool decision memo: the
-#: partition-count probe costs ~40 ms of driver time (plan -> RDD
-#: conversion), and the bench protocol rebuilds every query per timed
-#: run — without the memo that probe lands inside the timed region on
-#: every run.  mtime keying mirrors memo.py: a rewritten fixture under
-#: the same path invalidates the cached decision.
-_DECISION: dict = {}
-
-
-#: (applicationId, ("reader", path), mtime) -> reader DataFrame.
-#: ``spark.read.parquet`` costs ~100 ms of DRIVER time per call
-#: (footer read + schema inference), and the bench protocol rebuilds
-#: every query once per timed run — a 6-table query paid ~0.6 s of
-#: pure metadata work per run.  This memoizes the READER frame only:
-#: no rows are materialized or cached, every execution re-scans the
-#: parquet data; it is the moral equivalent of registering temp views
-#: once per session.  Eviction policy shared with memo.py (stale
-#: mtime or dead app -> dropped).
-_READER_CACHE: dict = {}
+from .memo import cached
 
 
 def read_parquet(spark, path: str) -> DataFrame:
     """Session-memoized ``spark.read.parquet(path)`` (see above)."""
-    from .memo import memo_lookup, source_mtime  # noqa: PLC0415
-
-    key, cached = memo_lookup(
-        _READER_CACHE,
-        spark.sparkContext.applicationId,
-        ("reader", path),
-        source_mtime(path),
-    )
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(path)
-    _READER_CACHE[key] = df
-    return df
+    return cached(spark, "reader", path, lambda: spark.read.parquet(path))
 
 
-def spread(df: DataFrame, key: str | None = None) -> DataFrame:
+def read_spread(spark, path: str) -> DataFrame:
+    """Session-memoized ``spread(read_parquet(spark, path))``."""
+    return cached(spark, "spread", path, lambda: spread(read_parquet(spark, path)))
+
+
+def spread(df: DataFrame) -> DataFrame:
     """Repartition ``df`` to cluster parallelism iff its current
-    partitioning cannot feed every core (see module docstring).
-
-    ``key`` (usually the parquet path) memoizes the partition-count
-    probe per session so repeated query builds skip the ~40 ms
-    plan->RDD conversion."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    memo_key = None
-    if key is not None:
-        try:
-            mtime = os.path.getmtime(key)
-        except OSError:
-            mtime = None
-        memo_key = (sc.applicationId, key, mtime)
-        cached = _DECISION.get(memo_key)
-        if cached is not None:
-            return df.repartition(target) if cached else df
+    partitioning cannot feed every core (see module docstring)."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         cur = df.rdd.getNumPartitions()
     except Exception:  # noqa: BLE001 — planning quirk: keep the plain scan
         return df
-    decision = cur < target
-    if memo_key is not None:
-        _DECISION[memo_key] = decision
-    return df.repartition(target) if decision else df
+    return df.repartition(target) if cur < target else df

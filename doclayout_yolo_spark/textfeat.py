@@ -6,9 +6,7 @@ Same shape as the reference's OCR feature extractor
 table mirrors ocr_utils.py:93-105's *structure* (one keyword list per
 layout class) with our own class vocabulary.
 
-Pure Python/NumPy — used inside the Arrow kernel and mirrored by the
-Spark-native column expressions in ``functions/text.py`` (which the
-DuckDB oracle can also express).
+Pure Python/NumPy — used inside the Arrow kernel.
 """
 
 from __future__ import annotations

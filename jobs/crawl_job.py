@@ -75,7 +75,6 @@ def main(stop_session: bool = True) -> None:
     )
     args = p.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from doclayout_yolo_spark.crawl import (
@@ -90,9 +89,9 @@ def main(stop_session: bool = True) -> None:
         extract_outlinks_df,
         pagerank_df,
     )
+    from doclayout_yolo_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("doclayout-crawl").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark(app="doclayout-crawl")
     if args.generate:
         pages = generate_pages_df(spark, args.generate)
     elif args.input:

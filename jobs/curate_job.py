@@ -50,16 +50,15 @@ def main(stop_session: bool = True) -> None:
     )
     args = p.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from doclayout_yolo_spark.queries_curation import (
         dedup_paragraphs_df,
         sequence_packing_df,
     )
+    from doclayout_yolo_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("doclayout-curate").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark(app="doclayout-curate")
 
     docs = spark.read.parquet(f"{args.input}/documents.parquet").select(
         "doc_id", "text", "source"

@@ -21,7 +21,7 @@ import argparse
 import json
 
 
-def main() -> None:
+def main(stop_session: bool = True) -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--input", help="pages table path (url, warc_ts, html, text, lang)")
     p.add_argument("--output", required=True)
@@ -41,16 +41,14 @@ def main() -> None:
     )
     args = p.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from doclayout_yolo_spark.fixtures import generate_pages_df
     from doclayout_yolo_spark.pipeline import (
         extract_outlinks_df,
         run_extraction_job,
     )
+    from doclayout_yolo_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("doclayout-extract").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark(app="doclayout-extract")
     if args.generate:
         pages = generate_pages_df(spark, args.generate)
     elif args.input:
@@ -69,7 +67,8 @@ def main() -> None:
         links.write.mode("overwrite").parquet(args.outlinks)
         stats["n_outlinks"] = spark.read.parquet(args.outlinks).count()
     print(json.dumps(stats))
-    spark.stop()
+    if stop_session:
+        spark.stop()
 
 
 if __name__ == "__main__":

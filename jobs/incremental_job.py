@@ -70,15 +70,13 @@ def main(stop_session: bool = True) -> None:
     )
     args = p.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from doclayout_yolo_spark.pipeline import (
         run_extraction_job,
         run_incremental_job,
     )
+    from doclayout_yolo_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("doclayout-incremental").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark(app="doclayout-incremental")
     if args.generate:
         old_pages, new_pages = synth_snapshots(spark, args.generate)
     elif args.old and args.new:

@@ -98,7 +98,20 @@ def test_incremental_job_entrypoint_smoke(spark, tmp_path_factory, monkeypatch):
         ["incremental_job.py", "--generate", "150", "--output", out,
          "--buckets", str(N_BUCKETS)],
     )
-    incremental_job.main(stop_session=False)
+    # the job must run the tuned config the tests and the bench measure,
+    # whatever the session held before (spark-submit's defaults here)
+    from doclayout_yolo_spark.session import sql_confs
+
+    tuned = sql_confs(spark.sparkContext.defaultParallelism)
+    saved = {k: spark.conf.get(k) for k in tuned}
+    try:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        spark.conf.set("spark.sql.parquet.compression.codec", "snappy")
+        incremental_job.main(stop_session=False)
+        assert {k: spark.conf.get(k) for k in tuned} == tuned
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
     urls = {r["url"] for r in read_extracted(spark, out).select("url").collect()}
     assert len(urls) == 150 - 20 + 30  # removed 20, added n//5
 

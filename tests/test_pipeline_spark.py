@@ -125,6 +125,30 @@ def test_run_job_and_resume(spark, pages_df, tmp_path_factory, golden):
     assert merged.filter(F.col("attempt_number").isNull()).count() == 0
 
 
+def test_extract_job_entrypoint_resumes(spark, tmp_path, monkeypatch, capsys):
+    """The shipped spark-submit entry point end to end: a second run
+    into the same output finds every bucket committed (exactly-once)."""
+    import json
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
+    import extract_job
+
+    out = str(tmp_path / "o")
+    monkeypatch.setattr(
+        sys, "argv",
+        ["extract_job.py", "--generate", "200", "--buckets", "8", "--output", out],
+    )
+    runs = []
+    for _ in range(2):
+        extract_job.main(stop_session=False)
+        runs.append(json.loads(capsys.readouterr().out.strip().splitlines()[-1]))
+    assert runs[0]["n_docs"] == 200 and runs[0]["n_buckets_processed"] > 0
+    assert runs[1]["n_buckets_processed"] == 0
+    assert read_extracted(spark, out).count() == 200
+
+
 def test_large_binary_rows_survive_batching(spark):
     # SURVEY §7 hard part 5: html:binary rows far above the Arrow
     # batch average must flow through the fused kernel without OOM or
