@@ -4,13 +4,14 @@ Plan (SURVEY §3.1 Spark rendering):
 
     scan(pages) -> select(url, html)            # column pruning, P3
       -> withColumn(part_id = pmod(xxhash64(url), n_buckets))
-      -> bucket selection: [resume] LEFT ANTI JOIN manifest ON part_id
+      -> bucket selection: [resume] NOT part_id IN (committed buckets)
          (exactly-once, P13) | stale buckets | incremental diff
       -> repartition(P, part_id)                # explicit shuffle, P8
       -> mapInArrow(extract_kernel)             # fused Arrow kernel, P1/P11
       -> dynamic-overwrite parquet write partitioned by part_id
-    + per-task lineage rows via accumulator -> lineage parquet
-    + manifest rows (one per written bucket) -> manifest parquet
+    + per-task lineage rows via accumulator -> one lineage parquet file
+    + manifest rows (one per written bucket) -> one manifest parquet file
+      (both written by the driver with pyarrow: no Spark job)
 
 The three job runners (``run_extraction_job``,
 ``reprocess_stale_buckets``, ``run_incremental_job``) differ only in
@@ -21,7 +22,7 @@ At 100 TB this maps 1:1 onto an Iceberg table: ``part_id`` becomes the
 ``bucket(url)`` partition transform, the manifest+data write becomes a
 single atomic snapshot commit, and resume prunes scanned files by
 partition.  Parquet stands in here because no Iceberg runtime jar is
-available in the sandbox; the logic (anti-join resume keyed on bucket,
+available in the sandbox; the logic (resume keyed on bucket,
 idempotent re-run) is identical.
 
 Kernel determinism: per-document computation uses only the document's
@@ -33,13 +34,17 @@ this (SURVEY §5.6).
 from __future__ import annotations
 
 import time
+from collections import Counter
 
+import pyarrow as pa
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from .extract import KERNEL_VERSION, extract_document, extract_documents
-from .tableformat import FORMAT, TOMBSTONE
+from .tableformat import FORMAT, append_parquet
 
 SPANS_DDL = (
     "array<struct<region_id:int,cls:int,name:string,conf:double,"
@@ -290,7 +295,12 @@ def data_path(output_path: str) -> str:
 
 
 def completed_buckets(spark: SparkSession, output_path: str) -> DataFrame | None:
-    return FORMAT.committed_buckets(spark, output_path, KERNEL_VERSION)
+    """The committed buckets as a one-column ``part_id`` frame (None
+    when the output has no manifest yet)."""
+    done = FORMAT.committed_buckets(spark, output_path, KERNEL_VERSION)
+    if done is None:
+        return None
+    return spark.createDataFrame([(p,) for p in done], "part_id int")
 
 
 LINEAGE_DDL = (
@@ -318,24 +328,28 @@ def _dedup_lineage(rows) -> list[dict]:
     return [best[k] for k in sorted(best)]
 
 
-def _write_lineage(spark: SparkSession, lineage_rows: list[dict], output_path: str) -> None:
+def _write_lineage(lineage_rows: list[dict], output_path: str) -> None:
+    """Append the job's lineage rows as one driver-written parquet file
+    (the ``LINEAGE_DDL`` columns; extra keys such as task_attempt_id
+    are dropped)."""
     if not lineage_rows:
         return
-    spark.createDataFrame(
-        [
-            (
-                r["task_partition_id"], r["attempt_number"],
-                r["part_ids"], r["n_docs"],
-                r["n_regions"], r["bytes_in"], float(r["t_start"]),
-                float(r["t_end"]),
-                float(r.get("parse_s", 0.0)), float(r.get("detect_s", 0.0)),
-                float(r.get("nms_s", 0.0)), float(r.get("assemble_s", 0.0)),
-                r["kernel_version"],
-            )
-            for r in lineage_rows
-        ],
-        schema=LINEAGE_DDL,
-    ).write.mode("append").parquet(FORMAT.lineage_path(output_path))
+    schema = to_arrow_schema(StructType.fromDDL(LINEAGE_DDL))
+    append_parquet(
+        FORMAT.lineage_path(output_path),
+        pa.Table.from_pylist(lineage_rows, schema=schema),
+    )
+
+
+def _run_stats(n_docs: int, wall: float, observed: dict) -> dict:
+    return {
+        "n_docs": n_docs,
+        "wall_s": wall,
+        "docs_per_sec": n_docs / wall if wall > 0 else 0.0,
+        "observed_rows": int(observed.get("rows", 0) or 0),
+        "observed_chars": int(observed.get("chars", 0) or 0),
+        "observed_errors": int(observed.get("errors", 0) or 0),
+    }
 
 
 def _extract_and_commit(
@@ -382,17 +396,10 @@ def _extract_and_commit(
     # same atomic snapshot commit as the data files)
     lineage_rows = _dedup_lineage(lineage_acc.value)
     written = sorted({p for r in lineage_rows for p in r["part_ids"]})
-    _write_lineage(spark, lineage_rows, output_path)
+    _write_lineage(lineage_rows, output_path)
     FORMAT.commit_buckets(spark, output_path, written, KERNEL_VERSION)
     n_docs = sum(r["n_docs"] for r in lineage_rows)
-    return written, {
-        "n_docs": n_docs,
-        "wall_s": wall,
-        "docs_per_sec": n_docs / wall if wall > 0 else 0.0,
-        "observed_rows": int(observed.get("rows", 0) or 0),
-        "observed_chars": int(observed.get("chars", 0) or 0),
-        "observed_errors": int(observed.get("errors", 0) or 0),
-    }
+    return written, _run_stats(n_docs, wall, observed)
 
 
 def run_extraction_job(
@@ -405,26 +412,31 @@ def run_extraction_job(
 ) -> dict:
     """Run (or resume) the extraction job.
 
-    Resume semantics (P13): buckets listed in the manifest are skipped
-    via a broadcast LEFT ANTI JOIN — re-running after a partial failure
-    processes only unfinished buckets and never duplicates a row.
-    Data directories for buckets missing from the manifest (crash
-    between data and manifest commit) are deleted up front, so the
-    pair behaves atomically — and no bucket this run writes has a
-    data directory yet.  ``bucket_filter`` (a Column predicate on
-    part_id) exists for the kill/resume test to simulate a mid-job
-    crash.
+    Resume semantics (P13): buckets committed in the manifest are
+    skipped by a ``NOT part_id IN (...)`` filter — re-running after a
+    partial failure processes only unfinished buckets and never
+    duplicates a row; when every bucket is committed, nothing runs at
+    all (no scan, no Spark job).  Data directories for buckets missing
+    from the manifest (crash between data and manifest commit) are
+    deleted up front, so the pair behaves atomically — and no bucket
+    this run writes has a data directory yet.  ``bucket_filter`` (a
+    Column predicate on part_id) exists for the kill/resume test to
+    simulate a mid-job crash.  The manifest is read on the driver, so
+    ``output_path`` must be on a local filesystem.
     """
     orphans = FORMAT.reconcile(spark, output_path)
-    bucketed = with_part_id(pages.select("url", "html"), n_buckets)
-    done = completed_buckets(spark, output_path)
-    if done is not None:
-        bucketed = bucketed.join(F.broadcast(done), "part_id", "left_anti")
-    if bucket_filter is not None:
-        bucketed = bucketed.filter(bucket_filter)
-    written, stats = _extract_and_commit(
-        spark, bucketed, output_path, num_partitions
-    )
+    done = FORMAT.committed_buckets(spark, output_path, KERNEL_VERSION) or []
+    if set(done).issuperset(range(n_buckets)):
+        written, stats = [], _run_stats(0, 0.0, {})
+    else:
+        bucketed = with_part_id(pages.select("url", "html"), n_buckets)
+        if done:
+            bucketed = bucketed.filter(~F.col("part_id").isin(done))
+        if bucket_filter is not None:
+            bucketed = bucketed.filter(bucket_filter)
+        written, stats = _extract_and_commit(
+            spark, bucketed, output_path, num_partitions
+        )
     return {
         **stats,
         "n_buckets_processed": len(written),
@@ -538,28 +550,26 @@ def run_incremental_job(
     Cost at crawl scale: one url-hash join (the diff) + extraction
     proportional to CHANGED content, not corpus size — the whole point
     of incremental ingestion at 10^12 documents."""
-    # persisted: the status counts and the affected-bucket collect
-    # both consume the diff, and the full-outer md5 join over two
-    # snapshots is the dominant non-extraction cost at crawl scale —
-    # paying it twice would double it
-    diff = snapshot_diff(old_pages, new_pages).persist()
-    counts = {
-        r["status"]: r["count"]
-        for r in diff.groupBy("status").count().collect()
-    }
-    affected = (
-        with_part_id(diff.filter(F.col("status") != "unchanged"), n_buckets)
-        .select("part_id")
-        .distinct()
+    # one pass over the diff (the full-outer md5 join over two
+    # snapshots is the dominant non-extraction cost at crawl scale):
+    # per-(status, bucket) counts, at most 4 x n_buckets rows —
+    # dimension-sized, never corpus-sized — give both the status counts
+    # and the affected buckets
+    per_bucket = (
+        with_part_id(snapshot_diff(old_pages, new_pages), n_buckets)
+        .groupBy("status", "part_id")
+        .count()
         .collect()
-    )  # bounded by n_buckets — dimension-sized, never corpus-sized
-    diff.unpersist(blocking=False)
-    stale = sorted(r["part_id"] for r in affected)
+    )
+    counts = Counter()
+    for r in per_bucket:
+        counts[r["status"]] += r["count"]
+    stale = sorted({r["part_id"] for r in per_bucket if r["status"] != "unchanged"})
     result = {
-        "n_added": int(counts.get("added", 0)),
-        "n_removed": int(counts.get("removed", 0)),
-        "n_changed": int(counts.get("changed", 0)),
-        "n_unchanged": int(counts.get("unchanged", 0)),
+        "n_added": counts["added"],
+        "n_removed": counts["removed"],
+        "n_changed": counts["changed"],
+        "n_unchanged": counts["unchanged"],
         "n_buckets_reprocessed": len(stale),
         "n_docs": 0,
     }

@@ -6,8 +6,8 @@ event-time semantics — so the Spark rendering is a file-source
 ``readStream`` over the pages table feeding the *identical* batch
 extraction transform via ``foreachBatch`` (micro-batch = the
 reference's per-batch yield).  Exactly-once comes from the streaming
-checkpoint (source offsets) + the same manifest anti-join as the batch
-job.
+checkpoint (source offsets) + a replay-idempotent overwrite of each
+micro-batch's ``batch_id`` partition.
 
 Also provides a watermarked tumbling-window aggregation over extracted
 regions — the event-time operator the reference lacks but a continuous

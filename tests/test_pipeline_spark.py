@@ -384,3 +384,164 @@ def test_manifest_seq_is_monotone_despite_clock(spark, tmp_path_factory):
     # and a re-commit supersedes the tombstone in turn
     FORMAT.commit_buckets(spark, out, [1], "1.0.0")
     assert [r["part_id"] for r in completed_buckets(spark, out).collect()] == [1]
+
+
+def _job_ids(spark, group: str, fn) -> list[int]:
+    """Spark job ids started while ``fn`` runs under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _sql_plans(spark, job_ids: list[int]) -> str:
+    """Physical plans of the SQL executions that ran ``job_ids``."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    plans = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if any(e.jobs().contains(j) for j in job_ids):
+            plans.append(e.physicalPlanDescription())
+    return "\n".join(plans)
+
+
+def test_job_count_pin(spark, pages_df, tmp_path_factory):
+    # the commit is driver-side metadata I/O: a fresh run is the data
+    # write alone (its shuffle-map job + the write job), and a resume
+    # that finds every bucket committed runs no Spark job at all
+    out = str(tmp_path_factory.mktemp("jobs") / "o")
+    fresh = _job_ids(
+        spark, "pin-fresh",
+        lambda: run_extraction_job(spark, pages_df, out, n_buckets=8),
+    )
+    assert 0 < len(fresh) <= 2, fresh
+    plans = _sql_plans(spark, fresh)
+    assert f"{out}/data" in plans
+    assert "_manifest" not in plans and "_lineage" not in plans
+    again = _job_ids(
+        spark, "pin-resume",
+        lambda: run_extraction_job(spark, pages_df, out, n_buckets=8),
+    )
+    assert again == []
+
+
+def _visible_files(path: str) -> list[str]:
+    import os
+
+    return sorted(n for n in os.listdir(path) if not n.startswith((".", "_")))
+
+
+def test_each_commit_adds_one_file_per_directory(spark, pages_df, tmp_path_factory):
+    # a Spark append would add defaultParallelism part files (+ _SUCCESS
+    # and .crc files) per commit, so repeated runs grew both directories
+    # without bound
+    import os
+
+    out = str(tmp_path_factory.mktemp("onefile") / "o")
+    run_extraction_job(
+        spark, pages_df, out, n_buckets=8, bucket_filter=F.col("part_id") < 4
+    )
+    for d in ("_manifest", "_lineage"):
+        assert len(os.listdir(f"{out}/{d}")) == 1, d
+    run_extraction_job(spark, pages_df, out, n_buckets=8)
+    for d in ("_manifest", "_lineage"):
+        assert len(os.listdir(f"{out}/{d}")) == 2, d
+        assert len(_visible_files(f"{out}/{d}")) == 2, d
+
+
+def test_hidden_temp_files_are_ignored(spark, pages_df, tmp_path_factory):
+    # an append interrupted before its rename leaves a dot-prefixed
+    # file behind: neither the driver-side reader nor Spark may see it
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from doclayout_yolo_spark.pipeline import (
+        FORMAT,
+        completed_buckets,
+        read_lineage,
+        stale_buckets,
+    )
+    from doclayout_yolo_spark.tableformat import MANIFEST_SCHEMA, TOMBSTONE
+
+    out = str(tmp_path_factory.mktemp("hidden") / "o")
+    run_extraction_job(spark, pages_df, out, n_buckets=8)
+    done = sorted(r["part_id"] for r in completed_buckets(spark, out).collect())
+    mdir, ldir = FORMAT.manifest_path(out), FORMAT.lineage_path(out)
+    n_manifest = spark.read.parquet(mdir).count()
+    # a newer tombstone for every bucket, and a second copy of the lineage
+    pq.write_table(
+        pa.table(
+            [done, [TOMBSTONE] * len(done), [9e9] * len(done)],
+            schema=MANIFEST_SCHEMA,
+        ),
+        f"{mdir}/.part-interrupted.parquet",
+    )
+    (lineage_file,) = _visible_files(ldir)
+    shutil.copy(f"{ldir}/{lineage_file}", f"{ldir}/.part-interrupted.parquet")
+
+    assert sorted(r["part_id"] for r in completed_buckets(spark, out).collect()) == done
+    assert stale_buckets(spark, out) == []
+    assert spark.read.parquet(mdir).count() == n_manifest
+    assert read_lineage(spark, out).agg(F.sum("n_docs")).first()[0] == N_PAGES
+    assert run_extraction_job(spark, pages_df, out, n_buckets=8)["n_docs"] == 0
+
+
+def test_legacy_spark_manifest_mixes_with_driver_appends(spark, tmp_path_factory):
+    # a manifest dir holding a Spark-written pre-seq file next to
+    # driver-written appends reads the same through the driver-side
+    # reader as through Spark's mergeSchema read with the same
+    # newest-row rule
+    from doclayout_yolo_spark.extract import KERNEL_VERSION
+    from doclayout_yolo_spark.pipeline import (
+        FORMAT,
+        completed_buckets,
+        stale_buckets,
+    )
+    from doclayout_yolo_spark.tableformat import TOMBSTONE
+
+    out = str(tmp_path_factory.mktemp("legacy") / "t")
+    mdir = FORMAT.manifest_path(out)
+    spark.createDataFrame(
+        [
+            (0, "v0"), (1, "v0"), (2, "v0"), (2, KERNEL_VERSION),
+            (3, KERNEL_VERSION), (5, KERNEL_VERSION),
+        ],
+        schema="part_id int, kernel_version string",
+    ).write.parquet(mdir)
+    FORMAT.commit_buckets(spark, out, [1], KERNEL_VERSION)
+    FORMAT.tombstone_buckets(spark, out, [3])
+    FORMAT.commit_buckets(spark, out, [4], "v0")
+    FORMAT.commit_buckets(spark, out, [5], "v0")
+
+    m = (
+        spark.read.option("mergeSchema", "true").parquet(mdir)
+        .withColumn("seq", F.coalesce(F.col("seq"), F.lit(0.0)))
+    )
+    newest = {
+        r["part_id"]: r["v"]
+        for r in m.groupBy("part_id").agg(
+            F.max_by(
+                "kernel_version",
+                F.struct(
+                    "seq",
+                    (F.col("kernel_version") == KERNEL_VERSION).cast("int"),
+                ),
+            ).alias("v")
+        ).collect()
+    }
+    want_done = sorted(p for p, v in newest.items() if v != TOMBSTONE)
+    want_stale = sorted(
+        p for p, v in newest.items() if v not in (KERNEL_VERSION, TOMBSTONE)
+    )
+    assert want_done == [0, 1, 2, 4, 5] and want_stale == [0, 4, 5]
+    got_done = sorted(r["part_id"] for r in completed_buckets(spark, out).collect())
+    assert got_done == want_done
+    assert stale_buckets(spark, out) == want_stale
+

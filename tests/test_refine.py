@@ -53,3 +53,42 @@ def test_feature_matrix_bit_identical_to_per_row():
     for i, t in enumerate(texts):
         v = feature_vector(t, (x1[i], y1[i], x2[i], y2[i]), (960.0, ph[i]))
         assert (mat[i] == v).all(), (i, t)
+
+
+def test_mlp_logits_fixed_order_any_batch():
+    """Each row's logits are the documented float32 sums, bit for bit,
+    whatever the batch size: ascending k for the hidden layer and for
+    classes below 8, even-k plus odd-k partial sums for the rest.  The
+    reference is scalar np.float32 arithmetic, which rounds the same on
+    every CPU; a BLAS matmul matches it only on some kernels."""
+    from doclayout_yolo_spark.refine import _WEIGHTS
+
+    w1, b1, w2, b2 = _WEIGHTS
+    feats = np.random.RandomState(1).rand(37, N_FEATURES).astype(np.float32)
+
+    def ordered_sum(terms):
+        acc = terms[0]
+        for t in terms[1:]:
+            acc = np.float32(acc + t)
+        return acc
+
+    def row_logits(f):
+        h = [
+            max(ordered_sum([f[k] * w1[k, j] for k in range(N_FEATURES)])
+                + b1[j], np.float32(0.0))
+            for j in range(w1.shape[1])
+        ]
+        out = []
+        for c in range(NC):
+            prods = [h[k] * w2[k, c] for k in range(len(h))]
+            if c < 8:
+                s = ordered_sum(prods)
+            else:
+                s = np.float32(ordered_sum(prods[0::2]) + ordered_sum(prods[1::2]))
+            out.append(np.float32(s + b2[c]))
+        return np.array(out, dtype=np.float32)
+
+    want = np.stack([row_logits(f) for f in feats])
+    np.testing.assert_array_equal(mlp_logits(feats), want)
+    for n in (1, 2, 5):
+        np.testing.assert_array_equal(mlp_logits(feats[:n]), want[:n])
