@@ -78,7 +78,7 @@ MATCH_DDL = "doc string, det_id long, cls long, conf double, " + ", ".join(
 )
 
 
-def _match_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+def _match_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
     doc = key[0]
     # applyInPandas delivers rows in shuffle-arrival order, and the
     # np.unique dedup in greedy_match is POSITIONAL — sort both sides
@@ -221,7 +221,7 @@ def confusion_matrix(
         F.lit(0.0).alias("conf"), "cls", F.lit("gt").alias("side"),
     )
 
-    def _group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         # sort by id: the positional np.unique dedup must not depend on
         # shuffle arrival order (ties in IoU exist in real data)
         pdf = pdf.sort_values("det_id")
@@ -298,7 +298,7 @@ def ap_per_class(
         counts, allowMissingColumns=True
     )
 
-    def _ap_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _ap_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         cls = int(key[0])
         n_gt = int(pdf["n_gt"].iloc[0])
         pdf = pdf[pdf["doc"].notna()].sort_values(

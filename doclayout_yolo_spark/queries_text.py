@@ -30,6 +30,7 @@ def _h64(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
+_H64_SPARK = "cast(conv(substring(md5({x}), 1, 15), 16, 10) as bigint)"
 _H64_DUCK = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
 
 
@@ -334,6 +335,16 @@ def _shingles(spark, sf_dir):
     )
 
 
+# the 3-gram shingle array of a token array ``w`` (SQL) — shared by the
+# batch shingle table and the streaming near-dup operator
+_SHINGLE_ARRAY = (
+    "CASE WHEN size(w) >= 3 THEN"
+    " transform(sequence(0, size(w) - 3),"
+    " i -> concat_ws(' ', w[i], w[i+1], w[i+2]))"
+    " ELSE cast(array() as array<string>) END"
+)
+
+
 def _shingles_from(docs_df):
     """Distinct (doc_id, 3-gram) rows from any (doc_id, text) frame —
     the DF-level core shared by the sf_dir-memoized builder and the
@@ -344,20 +355,9 @@ def _shingles_from(docs_df):
     empty for short docs, so the guard also IS the parity fix (r4
     second self-review)."""
     toks = docs_df.select("doc_id", F.expr(_toks_spark("text")).alias("w"))
-    return (
-        toks.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(w) >= 3 THEN"
-                    " transform(sequence(0, size(w) - 3),"
-                    " i -> concat_ws(' ', w[i], w[i+1], w[i+2]))"
-                    " ELSE cast(array() as array<string>) END"
-                )
-            ).alias("sh"),
-        )
-        .distinct()
-    )
+    return toks.select(
+        "doc_id", F.explode(F.expr(_SHINGLE_ARRAY)).alias("sh")
+    ).distinct()
 
 
 def _capped_from(sh):
@@ -465,9 +465,27 @@ N_BANDS = 4  # 2 rows per band
 # df-cap does not fence this (bands come from signatures, not shingle
 # df).  The cap bounds in-bucket work at C(CAP,2) pairs; 64
 # representatives keep near-dup clusters connected (each surviving doc
-# still links to the cluster minimum).  Never fires at fixture scale;
-# dropped rows are COUNTED, not silent — see lsh_bucket_cap_audit.
+# still links to the cluster minimum).  Never fires on the MinHash
+# bands at fixture scale (the doc-level simhash64 bands it also caps
+# do: see lsh_bucket_cap_audit); dropped rows are COUNTED, not silent.
 BUCKET_CAP = 64
+
+
+def _minhash_sql(s: int, x: str) -> str:
+    """MinHash permutation ``s`` of the shingle ``x`` as SQL: the
+    60-bit hash of ``'s:' || x``.  The one definition behind the batch
+    signature aggregate and the streaming row-local ``array_min``, so
+    the two renderings cannot drift."""
+    return _H64_SPARK.format(x=f"concat('{s}:', {x})")
+
+
+# signature columns m0..m{N_HASHES-1} -> (band, h1, h2) rows, band b
+# holding rows 2b and 2b+1 (shared by batch and stream like _minhash_sql)
+_BAND_STACK = (
+    f"stack({N_BANDS}, "
+    + ", ".join(f"{b}, m{2 * b}, m{2 * b + 1}" for b in range(N_BANDS))
+    + ") AS (band, h1, h2)"
+)
 
 
 def _minhash_bands(spark, sf_dir):
@@ -481,17 +499,56 @@ def _minhash_bands_from(sh):
     constant at 100 TB where the shingle explode dominates)."""
     sig = sh.groupBy("doc_id").agg(
         *[
-            F.min(_h64(F.concat(F.lit(f"{s}:"), F.col("sh")))).alias(f"m{s}")
+            F.min(F.expr(_minhash_sql(s, "sh"))).alias(f"m{s}")
             for s in range(N_HASHES)
         ]
     )
-    stack_args = ", ".join(
-        f"{band}, m{2 * band}, m{2 * band + 1}" for band in range(N_BANDS)
+    return sig.selectExpr("doc_id", _BAND_STACK)
+
+
+def _bucket_pairs(rows, key, cols, cap=None):
+    """The one banded-pair core behind every LSH / SimHash family:
+    distinct i<j pairs of ``rows`` that share a bucket ``key``.
+
+    ``cols`` maps each carried column to its (left, right) output names,
+    in output order; the first column orders each bucket.  With ``cap``
+    set a bucket keeps only its ``cap`` lowest rows (row_number <= cap,
+    which Spark plans as a map-side partial WindowGroupLimit before the
+    bucket exchange, so a mega-cluster ships at most ``cap`` rows per
+    map partition and the i<j expansion stays at C(cap, 2)); the rows a
+    cap drops are counted by ``_cap_dropped``, never silent.  Each
+    bucket becomes one sorted ``collect_list``; a pair that shares
+    several bands is emitted once."""
+    order = next(iter(cols))
+    if cap is not None:
+        rank = F.row_number().over(W.partitionBy(*key).orderBy(order))
+        rows = rows.withColumn("rk", rank).filter(F.col("rk") <= cap)
+    sides = ", ".join(
+        f"a.{c} AS {left}, b.{c} AS {right}" for c, (left, right) in cols.items()
     )
-    return sig.select(
-        "doc_id",
-        F.expr(f"stack({N_BANDS}, {stack_args}) AS (band, h1, h2)"),
+    return (
+        rows.groupBy(*key)
+        .agg(F.sort_array(F.collect_list(F.struct(*cols))).alias("ds"))
+        .filter(F.size("ds") > 1)
+        .select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(ds, (a, i) ->"
+                    " transform(slice(ds, i + 2, size(ds)),"
+                    f" b -> struct({sides}))))"
+                )
+            ).alias("p")
+        )
+        .select("p.*")
+        .distinct()
     )
+
+
+def _cap_dropped(n: str, cap: int):
+    """Band rows a bucket cap drops, over buckets of size ``n``:
+    sum(max(n - cap, 0)) — the one 'no silent caps' ledger expression
+    (lsh_bucket_cap_audit, neardup_collapse_df)."""
+    return F.sum(F.greatest(F.col(n) - F.lit(cap), F.lit(0))).cast("long")
 
 
 def dedup_minhash_lsh(spark, sf_dir):
@@ -512,28 +569,12 @@ def dedup_minhash_lsh(spark, sf_dir):
 
 
 def _lsh_candidates_from(bands):
-    wcap = W.partitionBy("band", "h1", "h2").orderBy("doc_id")
-    kept = (
-        bands.withColumn("rk", F.row_number().over(wcap))
-        .filter(F.col("rk") <= BUCKET_CAP)
-    )
-    buckets = (
-        kept.groupBy("band", "h1", "h2")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .filter(F.size("ds") > 1)
-    )
-    return (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (a, i) ->"
-                    " transform(slice(ds, i + 2, size(ds)),"
-                    " b -> struct(a AS doc_a, b AS doc_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
+    """(doc_a, doc_b) MinHash candidates from (doc_id, band, h1, h2)
+    band rows: ``_bucket_pairs`` on the (band, h1, h2) bucket, capped
+    at BUCKET_CAP doc_ids — shared by the contract query and
+    ``neardup_collapse_df``."""
+    return _bucket_pairs(
+        bands, ("band", "h1", "h2"), {"doc_id": ("doc_a", "doc_b")}, BUCKET_CAP
     )
 
 
@@ -1044,36 +1085,22 @@ def simhash_hamming_pairs(spark, sf_dir):
     bands = sim.select(
         "doc_id", "simhash", F.explode(band_structs).alias("bb")
     ).select("doc_id", "simhash", "bb.band", "bb.bucket")
-    buckets = (
-        bands.groupBy("band", "bucket")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("doc_id", "simhash"))
-            ).alias("ds")
-        )
-        .filter(F.size("ds") > 1)
-    )
-    pairs = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (a, i) ->"
-                    " transform(slice(ds, i + 2, size(ds)),"
-                    " b -> struct(a.doc_id AS doc_a, b.doc_id AS doc_b,"
-                    " a.simhash AS sa, b.simhash AS sb))))"
-                )
-            ).alias("p")
-        )
-        .select("p.*")
-        .distinct()
-    )
+    return _hamming_pairs(bands, _DOC_SIDES, None, HAMMING_MAX)
+
+
+# carried columns of the doc-level simhash families: (doc_a, doc_b, sa, sb)
+_DOC_SIDES = {"doc_id": ("doc_a", "doc_b"), "simhash": ("sa", "sb")}
+
+
+def _hamming_pairs(bands, sides, cap, max_d, out=("doc_a", "doc_b", "hamming")):
+    """SimHash pairs: ``_bucket_pairs`` on (band, bucket) carrying the
+    two signatures as sa/sb, verified by hamming(sa, sb) <= ``max_d``;
+    returns the ``out`` columns."""
+    pairs = _bucket_pairs(bands, ("band", "bucket"), sides, cap)
     return (
-        pairs.withColumn(
-            "hamming",
-            F.expr("bit_count(sa ^ sb)").cast("long"),
-        )
-        .filter(F.col("hamming") <= HAMMING_MAX)
-        .select("doc_a", "doc_b", "hamming")
+        pairs.withColumn("hamming", F.expr("bit_count(sa ^ sb)").cast("long"))
+        .filter(F.col("hamming") <= max_d)
+        .select(*out)
     )
 
 
@@ -1279,15 +1306,15 @@ def _sim64_band_structs():
     )
 
 
-def _sim64_bands(spark, sf_dir):
-    """(doc_id, simhash, band, bucket) rows in ONE pass — explode of a
-    band-struct array, not a 10-way union that would re-run the 64-sum
-    aggregation per band.  band t is block-pair (i, j); its bucket key
-    concatenates the two block values (~25-26 bits)."""
-    sim = _simhash64_df(spark, sf_dir)
-    return sim.select(
-        "doc_id", "simhash", F.explode(_sim64_band_structs()).alias("bb")
-    ).select("doc_id", "simhash", "bb.band", "bb.bucket")
+def _sim64_bands(rows, *carry):
+    """(*carry, band, bucket) rows from (b0..b4, *carry) rows in ONE
+    pass — explode of a band-struct array, not a 10-way union that
+    would re-run the 64-sum aggregation per band.  band t is block-pair
+    (i, j); its bucket key concatenates the two block values (~25-26
+    bits)."""
+    return rows.select(
+        *carry, F.explode(_sim64_band_structs()).alias("bb")
+    ).select(*carry, "bb.band", "bb.bucket")
 
 
 def simhash64_hamming_pairs(spark, sf_dir):
@@ -1306,46 +1333,12 @@ def simhash64_hamming_pairs(spark, sf_dir):
 
 
 def _sim64_pairs(spark, sf_dir, cap: int | None):
-    """Band-bucket pair expansion; ``cap=None`` disables the bucket cap
-    (exact pigeonhole recall — used by the scale bench to MEASURE what
-    the cap costs, never in the contract path)."""
-    bands = _sim64_bands(spark, sf_dir)
-    if cap is not None:
-        wcap = W.partitionBy("band", "bucket").orderBy("doc_id")
-        kept = (
-            bands.withColumn("rk", F.row_number().over(wcap))
-            .filter(F.col("rk") <= cap)
-        )
-    else:
-        kept = bands
-    buckets = (
-        kept.groupBy("band", "bucket")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("doc_id", "simhash"))
-            ).alias("ds")
-        )
-        .filter(F.size("ds") > 1)
-    )
-    pairs = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (a, i) ->"
-                    " transform(slice(ds, i + 2, size(ds)),"
-                    " b -> struct(a.doc_id AS doc_a, b.doc_id AS doc_b,"
-                    " a.simhash AS sa, b.simhash AS sb))))"
-                )
-            ).alias("p")
-        )
-        .select("p.*")
-        .distinct()
-    )
-    return (
-        pairs.withColumn("hamming", F.expr("bit_count(sa ^ sb)").cast("long"))
-        .filter(F.col("hamming") <= HAMMING64_MAX)
-        .select("doc_a", "doc_b", "hamming")
-    )
+    """simhash64 doc pairs through the ``_bucket_pairs`` core;
+    ``cap=None`` disables the bucket cap (exact pigeonhole recall —
+    used by tools/dedup_scale_bench.py to MEASURE what the cap costs,
+    never in the contract path)."""
+    bands = _sim64_bands(_simhash64_df(spark, sf_dir), "doc_id", "simhash")
+    return _hamming_pairs(bands, _DOC_SIDES, cap, HAMMING64_MAX)
 
 
 def _sim64_bit_duck(b: int) -> str:
@@ -1454,45 +1447,14 @@ def simhash64_sig_pairs(spark, sf_dir, cap: int = SIG_BUCKET_CAP):
     sum(C(n_docs,2)) within signatures + sum(n_docs_a*n_docs_b) across
     the emitted signature pairs (the scale bench verifies recall=1.0
     at fixture scale)."""
-    sigs = _sim64_sigs(spark, sf_dir)
-    bands = sigs.select(
-        "simhash", "n_docs", "rep_doc",
-        F.explode(_sim64_band_structs()).alias("bb"),
-    ).select("simhash", "n_docs", "rep_doc", "bb.band", "bb.bucket")
-    wcap = W.partitionBy("band", "bucket").orderBy("rep_doc")
-    kept = (
-        bands.withColumn("rk", F.row_number().over(wcap))
-        .filter(F.col("rk") <= cap)
-    )
-    buckets = (
-        kept.groupBy("band", "bucket")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("rep_doc", "simhash", "n_docs"))
-            ).alias("ds")
-        )
-        .filter(F.size("ds") > 1)
-    )
-    pairs = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (a, i) ->"
-                    " transform(slice(ds, i + 2, size(ds)),"
-                    " b -> struct(a.rep_doc AS rep_a, b.rep_doc AS rep_b,"
-                    " a.simhash AS sa, b.simhash AS sb,"
-                    " a.n_docs AS n_docs_a, b.n_docs AS n_docs_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.*")
-        .distinct()
-    )
-    return (
-        pairs.withColumn("hamming", F.expr("bit_count(sa ^ sb)").cast("long"))
-        .filter(F.col("hamming") <= HAMMING64_MAX)
-        .select("rep_a", "rep_b", "hamming", "n_docs_a", "n_docs_b")
-    )
+    bands = _sim64_bands(_sim64_sigs(spark, sf_dir), "simhash", "n_docs", "rep_doc")
+    sides = {
+        "rep_doc": ("rep_a", "rep_b"),
+        "simhash": ("sa", "sb"),
+        "n_docs": ("n_docs_a", "n_docs_b"),
+    }
+    out = ("rep_a", "rep_b", "hamming", "n_docs_a", "n_docs_b")
+    return _hamming_pairs(bands, sides, cap, HAMMING64_MAX, out)
 
 
 _SIG_BANDS_DUCK = "\nUNION ALL\n".join(
@@ -1553,10 +1515,12 @@ def lsh_bucket_cap_audit(spark, sf_dir):
     'no silent caps' ledger: n_buckets, the largest bucket, and how
     many band rows each family's cap would drop (BUCKET_CAP for the
     doc-level minhash/simhash64 bands, SIG_BUCKET_CAP for the
-    signature-level bands).  At fixture scale n_dropped is 0
-    everywhere (the caps exist for crawl-scale mega-clusters); a
-    curation job logs this alongside its pair counts so a fired cap is
-    visible, never silent."""
+    signature-level bands).  At fixture scale n_dropped is 0 for the
+    minhash and simhash64_sig families; the doc-level simhash64 cap
+    already fires (34 band rows at sf0.01, 7,156 at sf0.1 — the recall
+    loss simhash64_sig_pairs exists to avoid).  A curation job logs
+    this alongside its pair counts so a fired cap is visible, never
+    silent."""
 
     def _roll(sizes, fam, cap):
         return (
@@ -1564,9 +1528,7 @@ def lsh_bucket_cap_audit(spark, sf_dir):
             .agg(
                 F.count("*").cast("long").alias("n_buckets"),
                 F.max("n").cast("long").alias("max_bucket"),
-                F.sum(F.greatest(F.col("n") - F.lit(cap), F.lit(0)))
-                .cast("long")
-                .alias("n_dropped"),
+                _cap_dropped("n", cap).alias("n_dropped"),
             )
             .select(
                 F.lit(fam).alias("family"),
@@ -1591,9 +1553,8 @@ def lsh_bucket_cap_audit(spark, sf_dir):
     # rollup emits the two family rows from one projection (an
     # explode, not a union, so the subtree executes once).
     sig_sizes = (
-        _sim64_sigs(spark, sf_dir)
-        .select("n_docs", F.explode(_sim64_band_structs()).alias("bb"))
-        .groupBy("bb.band", "bb.bucket")
+        _sim64_bands(_sim64_sigs(spark, sf_dir), "n_docs")
+        .groupBy("band", "bucket")
         .agg(
             F.sum("n_docs").alias("n_docs_in_bucket"),
             F.count("*").alias("n_sigs"),
@@ -1604,15 +1565,9 @@ def lsh_bucket_cap_audit(spark, sf_dir):
         .agg(
             F.count("*").cast("long").alias("n_buckets"),
             F.max("n_docs_in_bucket").cast("long").alias("max_doc"),
-            F.sum(
-                F.greatest(
-                    F.col("n_docs_in_bucket") - F.lit(BUCKET_CAP), F.lit(0)
-                )
-            ).cast("long").alias("drop_doc"),
+            _cap_dropped("n_docs_in_bucket", BUCKET_CAP).alias("drop_doc"),
             F.max("n_sigs").cast("long").alias("max_sig"),
-            F.sum(
-                F.greatest(F.col("n_sigs") - F.lit(SIG_BUCKET_CAP), F.lit(0))
-            ).cast("long").alias("drop_sig"),
+            _cap_dropped("n_sigs", SIG_BUCKET_CAP).alias("drop_sig"),
         )
         .select(
             F.explode(
@@ -1959,9 +1914,7 @@ def neardup_collapse_df(docs_df, with_stats: bool = False):
             bands.groupBy("band", "h1", "h2")
             .agg(F.count("*").alias("n"))
             .agg(
-                F.sum(F.greatest(F.col("n") - BUCKET_CAP, F.lit(0))).alias(
-                    "n_cap_dropped_band_rows"
-                ),
+                _cap_dropped("n", BUCKET_CAP).alias("n_cap_dropped_band_rows"),
                 F.max("n").alias("max_bucket"),
             )
             .first()

@@ -15,6 +15,7 @@ from pyspark.sql import SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from .memo import cached
+from .queries_text import _bucket_pairs
 from .scan import read_parquet, read_spread
 
 TOPK = 3
@@ -411,10 +412,6 @@ N_PLANES = 8
 DIM = 64
 
 
-def _h64_expr(col):
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
 def _plane_matrix(n_planes: int) -> np.ndarray:
     """(n_planes, DIM) float64 pseudo-random hyperplanes from md5 —
     identical to the SQL oracle's per-(p, d) coefficient formula, built
@@ -581,24 +578,10 @@ def ann_lsh_multiband(spark, sf_dir):
             yield pd.concat(frames, ignore_index=True)
 
     sig = allv.mapInPandas(kernel, schema="vec_id long, band int, bucket long")
-    # candidate pairs via bucket grouping (same zero-self-join pattern
-    # as dedup_minhash_lsh)
-    cand = (
-        sig.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("vec_id")).alias("ds"))
-        .filter(F.size("ds") > 1)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (a, i) ->"
-                    " transform(slice(ds, i + 2, size(ds)),"
-                    " b -> struct(a AS vec_a, b AS vec_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.vec_a", "p.vec_b")
-        .distinct()
-    )
+    # candidate pairs through the banded-pair core shared with
+    # dedup_minhash_lsh (uncapped: the planted-recall measurement must
+    # see every bucket member)
+    cand = _bucket_pairs(sig, ("band", "bucket"), {"vec_id": ("vec_a", "vec_b")})
     base = _with_norm(allv).select(
         F.col("vec_id").alias("vec_a"), F.col("vec").alias("va"),
         F.col("nrm").alias("na"),

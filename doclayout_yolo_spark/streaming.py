@@ -283,8 +283,9 @@ def stateful_band_neardup(
     (measured: hundreds of 0-row batches) — so bounded backfill runs
     must opt in explicitly on a continuous trigger.
 
-    Same tokenizer / hash / band constants as the batch query: on the
-    same corpus the pair SET (normalized a<b, distinct) equals the
+    Built from the batch query's own tokenizer, shingle array, hash
+    family and band stack (imported from queries_text): on the same
+    corpus the pair SET (normalized a<b, distinct) equals the
     batch output whenever buckets stay under the cap — asserted by
     tests/test_streaming.py, not assumed."""
     from pyspark.sql.streaming.state import (  # noqa: PLC0415
@@ -294,39 +295,30 @@ def stateful_band_neardup(
 
     from .queries_text import (  # noqa: PLC0415
         BUCKET_CAP,
-        N_BANDS,
         N_HASHES,
+        _BAND_STACK,
+        _SHINGLE_ARRAY,
+        _minhash_sql,
         _toks_spark,
     )
 
     if bucket_cap is None:
         bucket_cap = BUCKET_CAP  # stay in lock-step with the batch cap
 
-    sh = (
-        "CASE WHEN size(w) >= 3 THEN array_distinct(transform("
-        "sequence(0, size(w) - 3),"
-        " i -> concat_ws(' ', w[i], w[i+1], w[i+2])))"
-        " ELSE cast(array() as array<string>) END"
-    )
-    stack_args = ", ".join(
-        f"{band}, m{2 * band}, m{2 * band + 1}" for band in range(N_BANDS)
-    )
+    # the batch query's shingle array, hash family and band stack, with
+    # the per-doc MIN aggregate replaced by a row-local array_min
     bands = (
         docs_stream.selectExpr("doc_id", f"{_toks_spark('text')} AS w")
-        .selectExpr("doc_id", f"{sh} AS sh")
+        .selectExpr("doc_id", f"array_distinct({_SHINGLE_ARRAY}) AS sh")
         .filter(F.size("sh") > 0)
         .selectExpr(
             "doc_id",
             *[
-                f"array_min(transform(sh, x ->"
-                f" cast(conv(substring(md5(concat('{s}:', x)), 1, 15), 16, 10)"
-                f" as bigint))) AS m{s}"
+                f"array_min(transform(sh, x -> {_minhash_sql(s, 'x')})) AS m{s}"
                 for s in range(N_HASHES)
             ],
         )
-        .selectExpr(
-            "doc_id", f"stack({N_BANDS}, {stack_args}) AS (band, h1, h2)"
-        )
+        .selectExpr("doc_id", _BAND_STACK)
     )
 
     def update(key, pdfs, state: "GroupState"):

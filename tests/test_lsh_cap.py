@@ -23,10 +23,12 @@ import pytest
 from doclayout_yolo_spark.queries_text import (
     BUCKET_CAP,
     N_BANDS,
+    SIG_BUCKET_CAP,
     SIM64_BANDS,
     dedup_minhash_lsh,
     lsh_bucket_cap_audit,
     simhash64_hamming_pairs,
+    simhash64_sig_pairs,
 )
 
 N_CLONES = 10_000
@@ -93,9 +95,18 @@ def test_sig_pairs_mega_cluster_collapses_to_zero_pairs(spark, mega_dir):
     assert sigs[0]["n_docs"] == N_CLONES and sigs[0]["rep_doc"] == 0
 
 
-def test_cap_is_applied_map_side(spark):
+@pytest.mark.parametrize(
+    ("query", "cap"),
+    [
+        (dedup_minhash_lsh, BUCKET_CAP),
+        (simhash64_hamming_pairs, BUCKET_CAP),
+        (simhash64_sig_pairs, SIG_BUCKET_CAP),
+    ],
+    ids=["dedup_minhash_lsh", "simhash64_hamming_pairs", "simhash64_sig_pairs"],
+)
+def test_cap_is_applied_map_side(spark, mega_dir, query, cap):
     plan = (
-        dedup_minhash_lsh(spark, "/root/testdata/sf0.001")
+        query(spark, mega_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -109,4 +120,4 @@ def test_cap_is_applied_map_side(spark):
     assert "WindowGroupLimit" in plan
     if pyspark.__version__.startswith("4.1"):
         assert "Partial" in plan
-        assert f"row_number(), {BUCKET_CAP}" in plan
+        assert f"row_number(), {cap}" in plan

@@ -221,10 +221,11 @@ def test_simhash_band_rows_are_single_pass(spark):
     # aggregation once per band
     from doclayout_yolo_spark.queries_text import (
         simhash64_hamming_pairs,
+        simhash64_sig_pairs,
         simhash_hamming_pairs,
     )
 
-    for q in (simhash_hamming_pairs, simhash64_hamming_pairs):
+    for q in (simhash_hamming_pairs, simhash64_hamming_pairs, simhash64_sig_pairs):
         plan = plan_of(q(spark, SF_DIR), "simple")
         assert plan.count("FileScan parquet") == 1, q.__name__
         assert "Union" not in plan, q.__name__
